@@ -74,8 +74,12 @@ def get_spark(app_name: str = "vector_tile_go_spark", cores: int | None = None,
         # fork python workers from a daemon that has ALREADY imported
         # numpy/pandas/pyarrow + the codec: ~100 MB/worker of import pages
         # become copy-on-write shared instead of private re-faults, and
-        # worker spawn is near-instant (daemon_preload.py; ships in the
-        # --py-files zip for real clusters)
+        # worker spawn is near-instant. The daemon also makes the
+        # importlib.invalidate_caches() pyspark runs before EVERY task a
+        # stat per zip archive instead of re-parsing pyspark.zip 14 times
+        # (~170 ms/task on CPython 3.11 -> ~0.1 ms; an empty 1-task python
+        # job 0.28 s -> 0.09 s on 4 CPUs). daemon_preload.py; ships in
+        # the --py-files zip for real clusters
         .config("spark.python.daemon.module",
                 "vector_tile_go_spark.daemon_preload")
         # executor<->worker traffic over unix domain sockets instead of
