@@ -1,6 +1,6 @@
 """Fixed per-task overhead probe: wall time of empty Spark jobs.
 
-Usage:  python tools/task_overhead_probe.py [--samples N] [--cores N]
+Usage:  python tools/task_overhead_probe.py
 
 Runs, under the engine's ``get_spark`` session, jobs that do no work:
 
@@ -10,7 +10,7 @@ Runs, under the engine's ``get_spark`` session, jobs that do no work:
   jvm_16task_s                 ``range`` into the noop sink (JVM only)
 
 and prints one JSON line with the median wall time of each over
-``--samples`` runs (after untimed warm-up runs that start the workers),
+``SAMPLES`` runs (after untimed warm-up runs that start the workers),
 plus ``worker_invalidate_caches_ms``: the median time of one
 ``importlib.invalidate_caches()`` inside a Python worker, which pyspark
 calls before every task. The gap between the Python and JVM-only jobs is
@@ -20,7 +20,6 @@ kernels; keep it visible when the host or the interpreter changes.
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import statistics
@@ -34,6 +33,7 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
     p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 WARMUP = 3
+SAMPLES = 9
 
 
 def _worker_probe(_):
@@ -44,21 +44,17 @@ def _worker_probe(_):
         t = time.perf_counter()
         importlib.invalidate_caches()
         times.append(time.perf_counter() - t)
-    zips = [type(f).__name__ for f in sys.path_importer_cache.values()
+    zips = [f for f in sys.path_importer_cache.values()
             if isinstance(f, zipimport.zipimporter)]
+    stat_checked = sum(type(f).invalidate_caches.__name__
+                       == "_stat_checked_invalidate_caches" for f in zips)
     return {"ms": statistics.median(times) * 1e3, "zipimporters": len(zips),
-            "stat_checked": zips.count("StatCheckedZipImporter")}
+            "stat_checked": stat_checked}
 
 
 def main() -> dict:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--samples", type=int, default=9)
-    ap.add_argument("--cores", type=int, default=int(
-        os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)))
-    args = ap.parse_args()
-
     from vector_tile_go_spark.session import get_spark
-    spark = get_spark("task_overhead_probe", cores=args.cores)
+    spark = get_spark("task_overhead_probe")
     sc = spark.sparkContext
 
     def noop(df):
@@ -81,17 +77,17 @@ def main() -> dict:
         for _ in range(WARMUP):
             job()
         times = []
-        for _ in range(args.samples):
+        for _ in range(SAMPLES):
             t = time.perf_counter()
             job()
             times.append(time.perf_counter() - t)
         out[name] = round(statistics.median(times), 4)
-    probes = sc.parallelize(range(args.samples), 1).map(_worker_probe).collect()
+    probes = sc.parallelize(range(SAMPLES), 1).map(_worker_probe).collect()
     out["worker_invalidate_caches_ms"] = round(
         statistics.median(p["ms"] for p in probes), 3)
     out["worker_zipimporters"] = probes[-1]["zipimporters"]
     out["worker_stat_checked_zipimporters"] = probes[-1]["stat_checked"]
-    out.update(cores=args.cores, samples=args.samples,
+    out.update(cores=sc.defaultParallelism, samples=SAMPLES,
                python=sys.version.split()[0])
     spark.stop()
     print(json.dumps(out))

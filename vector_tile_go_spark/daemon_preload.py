@@ -16,9 +16,9 @@ re-parses the whole archive directory. A worker holds ~16 zipimporters in
 ``sys.path_importer_cache`` (14 over pyspark.zip, 1,328 entries, one per
 package prefix; one over the py4j zip), so every task re-read them:
 ~170 ms per task on a 4-CPU host with Python 3.11, 90% of an empty task's
-profile. The daemon therefore swaps in ``StatCheckedZipImporter``, whose
-``invalidate_caches`` costs one ``stat`` unless the archive changed;
-forked workers inherit it, including for zips shipped later with
+profile. The daemon therefore replaces ``zipimporter.invalidate_caches``
+with one that costs a ``stat`` unless the archive changed; forked workers
+inherit it, including for zips shipped later with
 ``--py-files``/``addPyFile``. Measured on that host
 (``tools/task_overhead_probe.py``, medians of 3 runs, BASELINE.md
 "Stat-checked zip importers"): the in-worker ``invalidate_caches()``
@@ -65,45 +65,35 @@ def _preload() -> None:
                   file=sys.stderr, flush=True)
 
 
-class StatCheckedZipImporter(zipimport.zipimporter):
-    """zipimporter whose ``invalidate_caches`` re-reads the archive
-    directory only when the archive's (mtime_ns, size, inode) changed since
-    this importer last read it, so a rewritten archive is still picked up.
-    If the archive cannot be stat'ed it does the stock re-read, which then
-    behaves exactly as the stdlib importer does."""
+_stock_invalidate_caches = zipimport.zipimporter.invalidate_caches
 
-    _key = None  # stat key of the archive behind self._files; None: unknown
 
-    def invalidate_caches(self):
-        try:
-            st = os.stat(self.archive)
-            key = st.st_mtime_ns, st.st_size, st.st_ino
-        except OSError:
-            key = None
-        if key is None or key != self._key:
-            # stat before reading: a write racing the read leaves an older
-            # key behind, so the next call reads again
-            super().invalidate_caches()
-        self._key = key
+def _stat_checked_invalidate_caches(self):
+    """``zipimporter.invalidate_caches`` that re-reads the archive directory
+    only when the archive's (mtime_ns, size, inode) changed since this
+    importer last read it, so a rewritten archive is still picked up. If the
+    archive cannot be stat'ed it does the stock re-read, which then behaves
+    exactly as the stdlib importer does."""
+    try:
+        st = os.stat(self.archive)
+        key = st.st_mtime_ns, st.st_size, st.st_ino
+    except OSError:
+        key = None
+    if key is None or key != getattr(self, "_key", None):
+        # stat before reading: a write racing the read leaves an older key
+        # behind, so the next call reads again
+        _stock_invalidate_caches(self)
+    self._key = key
 
 
 def install_stat_checked_zip_importers() -> None:
-    """Make zipimporters in this process (and in processes forked from it)
-    stat-checked: the ``sys.path_hooks`` entry creates new ones, and the
-    ones already in ``sys.path_importer_cache`` are converted in place.
-    Converting in place (rather than constructing new importers) keeps them
-    the loaders of the modules they imported, so those loaders are still
-    refreshed when an archive changes."""
+    """Make every zipimporter in this process (and in processes forked from
+    it) stat-checked, the ones already in ``sys.path_importer_cache`` and
+    the ones created later alike, by replacing the method on the stdlib
+    class."""
     if sys.version_info >= (3, 13):
         return  # CPython 3.13 invalidates zip directories lazily itself
-    try:
-        i = sys.path_hooks.index(zipimport.zipimporter)
-    except ValueError:
-        return
-    sys.path_hooks[i] = StatCheckedZipImporter
-    for finder in sys.path_importer_cache.values():
-        if type(finder) is zipimport.zipimporter:
-            finder.__class__ = StatCheckedZipImporter
+    zipimport.zipimporter.invalidate_caches = _stat_checked_invalidate_caches
     # one last full read per importer records the stat keys, so forked
     # workers start with nothing to re-read
     importlib.invalidate_caches()
@@ -117,7 +107,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    # run through the package module, not __main__, so the importer class
-    # has one importable identity in the daemon and its forked workers
-    from vector_tile_go_spark import daemon_preload
-    daemon_preload.main()
+    main()
