@@ -274,18 +274,6 @@ def test_geom_bulk_degenerate_inputs_raise_like_scalar():
             np.array([3, 0]), np.array([0, 0]), np.array([True, False]))
 
 
-def test_is_4level_skips_empty_prefix():
-    """Round-5 review: a 4-level MultiPolygon whose FIRST polygon or ring
-    is empty must still route to the 4-level branch."""
-    from vector_tile_go_spark.sparkops.udfs import _is_4level
-    tri = [[0.0, 0.0], [1.0, 0.0], [0.5, 1.0]]
-    assert _is_4level([[tri]])
-    assert _is_4level([[], [[*tri]]])          # empty first polygon
-    assert not _is_4level([tri])               # 3-level
-    assert not _is_4level([[], tri])           # 3-level, empty first ring
-    assert not _is_4level([])
-
-
 def test_geom_bulk_multipoint_byte_identity():
     """MultiPoint through the bulk kernel: one MoveTo header with the
     ORIGINAL point count, zero-delta duplicates dropped from the stream
@@ -309,3 +297,159 @@ def test_geom_bulk_multipoint_byte_identity():
     scalar, bulk = _bulk_vs_scalar("MultiPoint", rows_by_tile, props, ids)
     for i, (sb, bb) in enumerate(zip(scalar, bulk)):
         assert sb == bb, f"MultiPoint tile {i} diverges"
+
+
+def _tile_pt(z, x, y):
+    import vector_tile_go_spark.tilemath as tm
+    w, s, e, n = map(float, tm.tile_bounds(z, x, y))
+    return lambda fx, fy: [w + fx * (e - w), s + fy * (n - s)]
+
+
+def test_typed_values_bulk_bytes():
+    """The bulk value dictionary is keyed like LayerEncoder._value_idx —
+    (type name, value) — so every MVT Value type encodes as the scalar
+    path does: bool, int, negative int, int >= 2^63, float, str, None (the
+    empty-string fallback), and -0.0 sharing the entry of an earlier 0.0
+    (and the reverse) within a tile."""
+    z, x, y = 7, 41, 53
+    pt = _tile_pt(z, x, y)
+    vals = [True, False, 7, -5, 2**63, 2**64 + 3, 1.5, 0.0, -0.0, "s",
+            None, "", "7"]
+    rows = [[pt(.1 + .05 * i, .2)] for i in range(len(vals))]
+    rows_by_tile = {(z, x, y): rows, (z, x + 1, y): rows[:3]}
+    props = {(z, x, y): [{"v": v, "w": "k"} for v in vals],
+             (z, x + 1, y): [{"v": -0.0, "w": "k"}, {"v": 0.0, "w": 1},
+                             {"v": None, "w": None}]}
+    ids = {(z, x, y): list(range(1, len(vals) + 1)),
+           (z, x + 1, y): [1, 2, 3]}
+    scalar, bulk = _bulk_vs_scalar("MultiPoint", rows_by_tile, props, ids)
+    assert scalar == bulk
+
+
+def test_typed_values_one_true_one_point_zero_stay_apart():
+    """1, True and 1.0 compare equal in Python but are three MVT values
+    (int64, bool, double); one tile holding all three gets three
+    dictionary entries, as from encode_layer."""
+    from vector_tile_go_spark.codec.decode import parse_tile
+    z, x, y = 7, 41, 53
+    pt = _tile_pt(z, x, y)
+    vals = [1, True, 1.0, 1, True, 1.0]
+    rows = [[[pt(.1, .1), pt(.2 + .1 * i, .3)]] for i in range(len(vals))]
+    scalar, bulk = _bulk_vs_scalar(
+        "MultiLineString", {(z, x, y): rows},
+        {(z, x, y): [{"v": v} for v in vals]},
+        {(z, x, y): list(range(1, len(vals) + 1))})
+    assert scalar == bulk
+    (layer,) = parse_tile(bulk[0])
+    assert [type(v) for v in layer.values] == [int, bool, float]
+
+
+def test_multipolygon_arrow_columns_3_and_4_level():
+    """flatten_geom_arrow reads the geometry straight from the column's
+    list offsets: a 3-level MultiPolygon column makes each ring a polygon,
+    a 4-level one keeps [polygon][ring] with holes. Both give the arrays
+    flatten_geom_rows gives and tiles byte-identical to encode_layer."""
+    import pyarrow as pa
+
+    from vector_tile_go_spark.codec.encode_fast import (
+        encode_geom_tiles_bulk, flatten_geom_arrow, flatten_geom_rows)
+    z, x, y = 7, 41, 53
+    pt = _tile_pt(z, x, y)
+    tri = [pt(.1, .1), pt(.5, .1), pt(.3, .5)]
+    hole = [pt(.25, .2), pt(.35, .2), pt(.3, .3)]
+    far = [pt(.6, .6), pt(.9, .6), pt(.75, .9), pt(.6, .6)]
+    l3 = pa.list_(pa.list_(pa.list_(pa.float64())))
+    cases = {
+        3: ([[tri, far], [far]],
+            lambda c: [[ring] for ring in c]),
+        4: ([[[tri, hole], [far]], [[far, tri]]], lambda c: c),
+    }
+    for depth, (rows, to_geojson) in cases.items():
+        col = pa.array(rows, l3 if depth == 3 else pa.list_(l3))
+        geo = [to_geojson(c) for c in rows]
+        got = flatten_geom_arrow("MultiPolygon", col)
+        for a, b in zip(got, flatten_geom_rows("MultiPolygon", geo)):
+            assert np.array_equal(a, b), depth
+        bufs, _ = encode_geom_tiles_bulk(
+            np.full(2, z), np.full(2, x), np.full(2, y), np.array([1, 2]),
+            {}, [0], [2], "g", "MultiPolygon", *got)
+        feats = [{"type": "MultiPolygon", "coordinates": c, "id": i + 1}
+                 for i, c in enumerate(geo)]
+        assert bufs[0] == encode_layer(feats, z, x, y, "g",
+                                       extent_clamp=False), depth
+
+
+def test_flatten_geom_arrow_rejects_bad_columns():
+    """One defined behaviour for malformed coords: null values, empty
+    rings and non-[x, y] points raise, like the scalar builders; a
+    4-level column is MultiPolygon-only."""
+    import pyarrow as pa
+
+    from vector_tile_go_spark.codec.encode_fast import flatten_geom_arrow
+    l3 = pa.list_(pa.list_(pa.list_(pa.float64())))
+    bad = {
+        "null coordinate": ("Polygon", pa.array([[[[0.0, None]]]], l3)),
+        "empty ring": ("LineString", pa.array([[[]]], l3)),
+        "empty Point": ("Point", pa.array([[]], l3)),
+        r"\[x, y\] pairs": ("Polygon", pa.array([[[[0.0, 1.0, 2.0]]]], l3)),
+        "empty polygon": ("MultiPolygon",
+                          pa.array([[[], [[[0.0, 0.0]]]]], pa.list_(l3))),
+        "3 list levels": ("Polygon", pa.array([[[[[0.0, 0.0]]]]],
+                                              pa.list_(l3))),
+    }
+    for match, (gt, col) in bad.items():
+        with pytest.raises(ValueError, match=match):
+            flatten_geom_arrow(gt, col)
+
+
+def test_geom_batch_rejects_null_feature_id():
+    """A null feature_id has no int64 to write: the batch encoder raises
+    instead of emitting a garbage id."""
+    import pyarrow as pa
+
+    from vector_tile_go_spark.sparkops import udfs
+    rb = pa.RecordBatch.from_arrays([
+        pa.array([5], pa.int32()), pa.array([9], pa.int64()),
+        pa.array([11], pa.int64()), pa.array([None], pa.int64()),
+        pa.array([[[[1.0, 2.0], [3.0, 4.0]]]],
+                 pa.list_(pa.list_(pa.list_(pa.float64())))),
+        pa.array(['{"k": 1}'])],
+        names=["z", "x", "y", "feature_id", "coords", "props"])
+    with pytest.raises(ValueError, match="null feature_id"):
+        udfs._geom_tiles(rb, np.array([0]), np.array([1]), "LineString",
+                         "json", "g", 4096, False)
+
+
+@pytest.mark.parametrize("geom_type", ["LineString", "Point"])
+def test_json_props_layers_through_spark(spark, geom_type):
+    """JSON-object props ride the bulk mapInArrow route: str/int/float/
+    bool/null values become typed MVT values, byte-identical to
+    encode_layer over json.loads of the same rows."""
+    import json
+
+    from vector_tile_go_spark.sparkops.udfs import encode_geojson_tiles
+    z = 7
+    props = [{"name": "a", "n": 3, "f": 0.5, "ok": True},
+             {"name": "b", "n": -2**40, "f": 1.0, "ok": False},
+             {"name": None, "n": 1, "f": -0.0, "ok": True}]
+    rows, want = [], {}
+    for t in range(4):                    # tile 3: a null props row
+        if t == 3:
+            props = [None]
+        x, y = 41 + t, 53
+        pt = _tile_pt(z, x, y)
+        feats = []
+        for i, p in enumerate(props[:t + 1]):
+            line = [pt(.1 * (i + 1), .2), pt(.5, .1 * (i + 2))]
+            rows.append((z, x, y, i + 1, [line],
+                         None if p is None else json.dumps(p)))
+            feats.append({"type": geom_type, "id": i + 1, "properties": p,
+                          "coordinates": line[0] if geom_type == "Point"
+                          else line})
+        want[x] = encode_layer(feats, z, x, y, "g", extent_clamp=False)
+    df = spark.createDataFrame(
+        rows, "z int, x long, y long, feature_id long, "
+              "coords array<array<array<double>>>, props string")
+    got = {r["x"]: bytes(r["tile_pbf"]) for r in
+           encode_geojson_tiles(df, geom_type, layer_name="g").collect()}
+    assert got == want

@@ -140,7 +140,7 @@ def test_bulk_geom_stream_multi_tile_batches(spark):
 
     import vector_tile_go_spark.tilemath as tm
     from vector_tile_go_spark.codec.encode import encode_layer
-    from vector_tile_go_spark.sparkops.udfs import encode_geom_tiles
+    from vector_tile_go_spark.sparkops.udfs import encode_geojson_tiles
     z = 6
     rows = []
     for t in range(12):           # 12 tiles, 3 triangles each
@@ -156,8 +156,8 @@ def test_bulk_geom_stream_multi_tile_batches(spark):
               "coords array<array<array<double>>>, "
               "props map<string,string>")
     out = {(r["x"]): r for r in
-           encode_geom_tiles(df, "Polygon", layer_name="g",
-                             n_partitions=2).collect()}
+           encode_geojson_tiles(df, "Polygon", layer_name="g",
+                                n_partitions=2).collect()}
     assert len(out) == 12
     for t in range(12):
         x, y = 10 + t, 20
@@ -182,7 +182,7 @@ def test_bulk_geom_stream_nonuniform_props_fallback(spark):
 
     import vector_tile_go_spark.tilemath as tm
     from vector_tile_go_spark.codec.encode import encode_layer
-    from vector_tile_go_spark.sparkops.udfs import encode_geom_tiles
+    from vector_tile_go_spark.sparkops.udfs import encode_geojson_tiles
     z, x, y = 6, 10, 20
     w, s, e, n = map(float, tm.tile_bounds(z, x, y))
     tri1 = [[w + .1 * (e - w), s + .1 * (n - s)],
@@ -197,7 +197,7 @@ def test_bulk_geom_stream_nonuniform_props_fallback(spark):
         rows, "z int, x long, y long, feature_id long, "
               "coords array<array<array<double>>>, "
               "props map<string,string>")
-    out = encode_geom_tiles(df, "Polygon", layer_name="g").collect()
+    out = encode_geojson_tiles(df, "Polygon", layer_name="g").collect()
     assert len(out) == 1
     feats = [{"type": "Polygon", "coordinates": [tri1],
               "properties": {"nk": "0"}, "id": 1},
@@ -205,3 +205,56 @@ def test_bulk_geom_stream_nonuniform_props_fallback(spark):
               "properties": {"other": "1"}, "id": 2}]
     want = encode_layer(feats, z, x, y, "g", extent_clamp=False)
     assert bytes(out[0]["tile_pbf"]) == want
+
+
+def test_nonuniform_tile_falls_back_alone(monkeypatch):
+    """No Spark: one batch of five tiles, one of them holding rows with
+    different prop-key sets. Only that tile goes through the scalar
+    encode_layer (exactly one call); the other four, three key sets among
+    them (one a null map), ride the bulk kernel. Every tile equals
+    encode_layer."""
+    import pyarrow as pa
+
+    import vector_tile_go_spark.tilemath as tm
+    from vector_tile_go_spark.codec.encode import encode_layer
+    from vector_tile_go_spark.sparkops import udfs
+    z, y = 6, 20
+    props = {10: [{"k": "a"}, {"k": "b"}],
+             11: [{"k": "a"}, {"other": "1"}],        # non-uniform
+             12: [{"k": "c", "m": "x"}, {"m": "y", "k": "c"}],
+             13: [{"k": "a"}],
+             14: [None]}                              # null map: no tags
+    rows = []
+    for x, ps in props.items():
+        w, s, e, n = map(float, tm.tile_bounds(z, x, y))
+        for i, p in enumerate(ps):
+            tri = [[w + (.1 + .1 * i) * (e - w), s + .1 * (n - s)],
+                   [w + .6 * (e - w), s + .2 * (n - s)],
+                   [w + .3 * (e - w), s + .8 * (n - s)]]
+            rows.append((x, i + 1, [tri], p))
+    rb = pa.RecordBatch.from_arrays([
+        pa.array([z] * len(rows), pa.int32()),
+        pa.array([r[0] for r in rows], pa.int64()),
+        pa.array([y] * len(rows), pa.int64()),
+        pa.array([r[1] for r in rows], pa.int64()),
+        pa.array([r[2] for r in rows],
+                 pa.list_(pa.list_(pa.list_(pa.float64())))),
+        pa.array([r[3] and list(r[3].items()) for r in rows],
+                 pa.map_(pa.string(), pa.string()))],
+        names=["z", "x", "y", "feature_id", "coords", "props"])
+    calls = []
+
+    def counting(*a, **k):
+        calls.append(a[1:4])
+        return encode_layer(*a, **k)
+
+    monkeypatch.setattr(udfs, "encode_layer", counting)
+    out = pa.Table.from_batches(list(udfs._sorted_tile_groups(
+        iter([rb]), lambda b, s, e: udfs._geom_tiles(
+            b, s, e, "Polygon", "map", "g", 4096, False)))).to_pydict()
+    assert calls == [(z, 11, y)]
+    assert out["n_features"] == [2, 2, 2, 1, 1]
+    for x, buf in zip(out["x"], out["tile_pbf"]):
+        feats = [{"type": "Polygon", "coordinates": r[2], "properties": r[3],
+                  "id": r[1]} for r in rows if r[0] == x]
+        assert buf == encode_layer(feats, z, x, y, "g", extent_clamp=False)

@@ -2,8 +2,10 @@
 
 - No CartesianProduct / BroadcastNestedLoopJoin anywhere.
 - Python appears only at the codec/kernel boundary: every Python node is
-  Arrow-batched (MapInPandas / FlatMapGroupsInPandas / ArrowEvalPython) —
-  never a row-at-a-time BatchEvalPython.
+  Arrow-batched (MapInArrow / MapInPandas / FlatMapGroupsInPandas /
+  ArrowEvalPython) — never a row-at-a-time BatchEvalPython.
+- The generic-geometry encoder is one mapInArrow route for every geometry
+  type and both props schemas.
 
 Queries whose *construction* triggers driver actions (the escalating kNN
 rounds, streaming runs, stateful ops) are exercised by their own tests and
@@ -45,4 +47,24 @@ def test_python_only_at_arrow_batched_boundaries(spark, sf_dir):
         for bad in ROW_PYTHON:
             if bad in plan:
                 offenders.append((name, bad))
+    assert not offenders, offenders
+
+
+@pytest.mark.parametrize("props_type", ["map<string,string>", "string"])
+def test_geojson_encode_is_one_map_in_arrow(spark, props_type):
+    from vector_tile_go_spark.sparkops.udfs import encode_geojson_tiles
+    kinds = {"Point": 3, "MultiPoint": 3, "LineString": 3,
+             "MultiLineString": 3, "Polygon": 3, "MultiPolygon": 4}
+    offenders = []
+    for geom_type, depth in kinds.items():
+        for levels in {3, depth}:
+            coords = "array<" * levels + "double" + ">" * levels
+            df = spark.createDataFrame(
+                [], f"z int, x long, y long, feature_id long, "
+                    f"coords {coords}, props {props_type}")
+            plan = encode_geojson_tiles(df, geom_type)._jdf \
+                .queryExecution().executedPlan().toString()
+            if ("MapInArrow" not in plan or "FlatMapGroupsInPandas" in plan
+                    or "MapInPandas" in plan):
+                offenders.append((geom_type, levels))
     assert not offenders, offenders

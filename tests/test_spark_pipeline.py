@@ -111,28 +111,50 @@ def test_tile_stats_lazy_scan(spark, sf_dir):
     assert (s["version"] == 2).all()
 
 
-def test_encode_arrow_pandas_byte_parity(spark, sf_dir):
-    """The mapInArrow encode boundary must produce byte-identical tiles to
-    the mapInPandas path (same kernel, same group slicing) — including the
-    salted multi-frame variant's partials."""
+def _point_layers(rows, prop_cols):
+    """encode_layer per tile for (z, x, y, lng, lat, doc_id, props...)
+    rows in encode_point_tiles' sort order (nulls first); props rendered
+    as str()."""
+    from vector_tile_go_spark.codec.encode import encode_layer
+
+    def order(r):
+        return (r["z"], r["x"], r["y"], r["doc_id"],
+                *((r[c] is not None, "" if r[c] is None else r[c])
+                  for c in prop_cols))
+
+    tiles = {}
+    for r in sorted(rows, key=order):
+        tiles.setdefault((r["z"], r["x"], r["y"]), []).append(
+            {"type": "Point", "coordinates": [r["lng"], r["lat"]],
+             "id": r["doc_id"] or None,
+             "properties": {c: str(r[c]) for c in prop_cols}})
+    return {k: encode_layer(f, *k, "geo", extent_clamp=True)
+            for k, f in tiles.items()}
+
+
+def test_encode_point_tiles_match_encode_layer(spark, sf_dir):
+    """The mapInArrow point encoder (sorted-batch carry + bulk kernel)
+    must produce, per tile, the bytes of the scalar encode_layer over the
+    same features in the plan's sort order."""
     from pyspark.sql import functions as F
     from vector_tile_go_spark.queries import entities_df
     from vector_tile_go_spark.sparkops.udfs import encode_point_tiles
 
     e = entities_df(spark, sf_dir).filter(F.col("doc_id") < 500)
-    a = encode_point_tiles(e, prop_cols=("url", "mention_idx"),
-                           use_arrow=True)
-    p = encode_point_tiles(e, prop_cols=("url", "mention_idx"),
-                           use_arrow=False)
-    am = {(r["z"], r["x"], r["y"]): bytes(r["tile_pbf"]) for r in a.collect()}
-    pm = {(r["z"], r["x"], r["y"]): bytes(r["tile_pbf"]) for r in p.collect()}
-    assert am == pm and len(am) > 0
+    got = {(r["z"], r["x"], r["y"]): bytes(r["tile_pbf"])
+           for r in encode_point_tiles(
+               e, prop_cols=("url", "mention_idx"), n_partitions=2)
+           .collect()}
+    rows = [r.asDict() for r in e.select(
+        "z", "x", "y", "lng", "lat", "doc_id", "url", "mention_idx")
+        .collect()]
+    assert got == _point_layers(rows, ("url", "mention_idx")) and got
 
 
-def test_encode_null_props_arrow_pandas_parity(spark):
-    """Null property values must encode identically on both boundary
-    paths (pandas astype(str) renders None as 'None'; the arrow path must
-    not crash or diverge) — review finding r2."""
+def test_encode_null_props_match_encode_layer(spark):
+    """Null property values encode as the string 'None' (pandas
+    astype(str) rendering), byte-identical to encode_layer over str()
+    values, and decode back as 'None' — review finding r2."""
     import pandas as pd
     from vector_tile_go_spark import tilemath as tm
     from vector_tile_go_spark.sparkops.udfs import (decode_tiles,
@@ -147,14 +169,12 @@ def test_encode_null_props_arrow_pandas_parity(spark):
         "url": ["u1", None, "u3", None],
         "mention_idx": ["0", "1", None, "2"]})
     df = spark.createDataFrame(pdf)
-    a = encode_point_tiles(df, prop_cols=("url", "mention_idx"),
-                           use_arrow=True).collect()
-    p = encode_point_tiles(df, prop_cols=("url", "mention_idx"),
-                           use_arrow=False).collect()
-    assert len(a) == len(p) == 1
-    assert bytes(a[0]["tile_pbf"]) == bytes(p[0]["tile_pbf"])
-    feats = decode_tiles(encode_point_tiles(
-        df, prop_cols=("url", "mention_idx")), mode="props").collect()
+    tiles = encode_point_tiles(df, prop_cols=("url", "mention_idx"))
+    got = tiles.collect()
+    want = _point_layers(pdf.to_dict("records"), ("url", "mention_idx"))
+    assert len(got) == 1
+    assert bytes(got[0]["tile_pbf"]) == want[(z, x, y)]
+    feats = decode_tiles(tiles, mode="props").collect()
     assert sorted(f["properties"]["url"] for f in feats) == \
         ["None", "None", "u1", "u3"]
 

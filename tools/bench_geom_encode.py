@@ -6,7 +6,11 @@ Usage:  python tools/bench_geom_encode.py [ntiles] [feats_per_tile] [verts]
 Compares the scalar per-tile encode_layer loop (what encode_geojson_tiles
 ran before round 5) against flatten_geom_rows + encode_geom_tiles_bulk on
 the same synthetic two-ring (exterior + hole) polygon workload, asserts
-byte-identity, and prints per-feature/per-vertex costs. Standalone kernel
+byte-identity, and prints per-feature/per-vertex costs. A second case
+encodes LineStrings with JSON-typed props (str/int/float/bool/null)
+through encode_geojson_tiles' batch body (Arrow column in, json.loads per
+row, typed bulk dictionary) against encode_layer over json.loads of the
+same rows, again asserting byte-identity. Standalone kernel
 benches on this host need the malloc thresholds pinned (see CLAUDE.md);
 this script sets them for its own numpy allocations where it can, but for
 faithful numbers run:
@@ -14,10 +18,12 @@ faithful numbers run:
   MALLOC_MMAP_THRESHOLD_=268435456 MALLOC_TRIM_THRESHOLD_=268435456 \
       python tools/bench_geom_encode.py
 """
+import json
 import sys
 import time
 
 import numpy as np
+import pyarrow as pa
 
 sys.path.insert(0, ".")
 
@@ -25,6 +31,58 @@ import vector_tile_go_spark.tilemath as tm  # noqa: E402
 from vector_tile_go_spark.codec.encode import encode_layer  # noqa: E402
 from vector_tile_go_spark.codec.encode_fast import (  # noqa: E402
     encode_geom_tiles_bulk, flatten_geom_rows)
+from vector_tile_go_spark.sparkops import udfs  # noqa: E402
+
+
+def json_lines_case(ntiles, fpt, vpr, rng):
+    """LineStrings with JSON-typed props: scalar encode_layer per tile vs
+    the mapInArrow batch body (udfs._geom_tiles) on one Arrow batch."""
+    z = 9
+    rows = []
+    for _ in range(ntiles):
+        tx, ty = int(rng.integers(0, 512)), int(rng.integers(100, 400))
+        w, s, e, n = map(float, tm.tile_bounds(z, tx, ty))
+        for i in range(fpt):
+            pts = np.stack([w + rng.random(vpr) * (e - w),
+                            s + rng.random(vpr) * (n - s)], 1).tolist()
+            props = {"name": f"r{i % 11}", "lanes": int(i % 4),
+                     "speed": [30.0, 50.0, 0.0, -0.0][i % 4],
+                     "oneway": bool(i % 2), "ref": None if i % 5 else "A1"}
+            rows.append((tx, ty, i + 1, pts, json.dumps(props)))
+    rows.sort(key=lambda r: (r[0], r[1], r[2]))
+    t0 = time.perf_counter()
+    scalar = {}
+    for r in rows:
+        scalar.setdefault((r[0], r[1]), []).append(
+            {"type": "LineString", "coordinates": r[3],
+             "properties": json.loads(r[4]), "id": r[2]})
+    scalar = {k: encode_layer(f, z, *k, "g", extent_clamp=False)
+              for k, f in scalar.items()}
+    t_scalar = time.perf_counter() - t0
+    rb = pa.RecordBatch.from_arrays([
+        pa.array([z] * len(rows), pa.int32()),
+        pa.array([r[0] for r in rows], pa.int64()),
+        pa.array([r[1] for r in rows], pa.int64()),
+        pa.array([r[2] for r in rows], pa.int64()),
+        pa.array([[r[3]] for r in rows],
+                 pa.list_(pa.list_(pa.list_(pa.float64())))),
+        pa.array([r[4] for r in rows], pa.string())],
+        names=["z", "x", "y", "feature_id", "coords", "props"])
+    t_bulk = None
+    for _ in range(2):  # warm pass, as for the polygons
+        t0 = time.perf_counter()
+        out = pa.Table.from_batches(list(udfs._sorted_tile_groups(
+            iter([rb]), lambda b, s, e: udfs._geom_tiles(
+                b, s, e, "LineString", "json", "g", 4096, False))))
+        t_bulk = time.perf_counter() - t0
+    d = out.to_pydict()
+    got = {(x, y): b for x, y, b in zip(d["x"], d["y"], d["tile_pbf"])}
+    assert got == scalar, "JSON-props bulk diverges from scalar"
+    nfeat = len(rows)
+    print(f"json lines: features={nfeat} verts={nfeat * vpr}")
+    print(f"scalar: {t_scalar:.3f}s ({1e6 * t_scalar / nfeat:.1f} us/feat)")
+    print(f"bulk:   {t_bulk:.3f}s ({1e6 * t_bulk / nfeat:.1f} us/feat)")
+    print(f"speedup: {t_scalar / t_bulk:.1f}x (warm)")
 
 
 def main():
@@ -85,6 +143,7 @@ def main():
     print(f"bulk:   {t_bulk:.3f}s ({1e6 * t_bulk / nfeat:.1f} us/feat, "
           f"{1e6 * t_bulk / nverts:.2f} us/vert)")
     print(f"speedup: {t_scalar / t_bulk:.1f}x (warm)")
+    json_lines_case(ntiles, fpt, 8, rng)
 
 
 if __name__ == "__main__":

@@ -20,7 +20,7 @@ from __future__ import annotations
 import numpy as np
 
 from .. import tilemath as tm
-from .wire import encode_varint
+from .values import write_value
 
 
 def project_points_bulk(z, x_arr, y_arr, lng, lat, extent: int = 4096,
@@ -116,21 +116,47 @@ def _write_varints(buf: np.ndarray, pos: np.ndarray, vals: np.ndarray,
         buf[pos[m] + b] = bv
 
 
+def _value_codes(flat: np.ndarray):
+    """Codes into a typed value table for the object array ``flat``: two
+    values share a code iff LayerEncoder._value_idx gives them one
+    dictionary entry, i.e. iff their ``(type name, value)`` keys are equal
+    (Go map keys are typed variants, write_layer.go:87-92). So ``1``,
+    ``True`` and ``1.0`` stay apart and ``None`` gets its own entry. All-str
+    input (every point layer) takes one pd.factorize; anything else one
+    dict lookup per value. Returns (int64 codes, unique values in
+    first-appearance order, per-unique flag "members may differ in
+    bytes"): ``0.0`` and ``-0.0`` share an entry whose bytes are those of
+    whichever came first in the tile."""
+    import pandas as pd
+
+    if pd.api.types.infer_dtype(flat, skipna=False) == "string":
+        codes, uniques = pd.factorize(flat)
+        return codes, list(uniques), np.zeros(len(uniques), bool)
+    table: dict = {}
+    codes = np.fromiter(
+        (table.setdefault((type(v).__name__, v), len(table)) for v in flat),
+        np.int64, len(flat))
+    uniques = [v for _, v in table]
+    signed_zero = np.fromiter(
+        (isinstance(v, (float, np.floating)) and v == 0 for v in uniques),
+        bool, len(uniques))
+    return codes, uniques, signed_zero
+
+
 def _props_dict_bulk(cols, tile_of_row, ntiles: int, nrows: int):
     """Per-tile shared value dictionary, indexed in first-appearance order
-    (feature-major, column-minor): one global pd.factorize + a per-tile
-    first-seen rank over the (tile, value) uniques. ``cols`` are object
-    arrays of str in sorted-key order. Returns
+    (feature-major, column-minor): one global typed factorize
+    (_value_codes) + a per-tile first-seen rank over the (tile, value)
+    uniques. ``cols`` are object arrays of property values (any of the
+    MVT Value types, values.write_value) in sorted-key order. Returns
     (vi, vilen, pl_u, props_len, counts, enc_uniques, codes_in_order, kp)
     — shared by the point and line/polygon bulk encoders so the dictionary
     bytes can never diverge between them."""
-    import pandas as pd
-
     ncols = len(cols)
     mat = np.empty((nrows, ncols), dtype=object)
     for j, c in enumerate(cols):
         mat[:, j] = c
-    codes, uniques = pd.factorize(mat.ravel())  # row-major = dict order
+    codes, uniques, signed_zero = _value_codes(mat.ravel())  # row-major
     U = max(len(uniques), 1)
     combined = np.repeat(tile_of_row, ncols) * U + codes
     uniq_c, first_idx, inverse = np.unique(
@@ -145,10 +171,19 @@ def _props_dict_bulk(cols, tile_of_row, ntiles: int, nrows: int):
     vi = ranks[inverse].reshape(nrows, ncols).astype(np.uint64)
     vilen = _varlen_u64(vi.ravel()).reshape(nrows, ncols)
     # encode each GLOBAL unique value once; per-tile streams gather the
-    # pre-encoded bytes (O(global uniques) _value_str calls, not
-    # O(tile-distinct) — the profiled residue of the r3 loop)
-    enc_uniques = [_value_str(v) for v in uniques]
-    codes_in_order = (uniq_c[order] % U).tolist()
+    # pre-encoded bytes (O(global uniques) encodes, not O(tile-distinct) —
+    # the profiled residue of the r3 loop); str, the hot case, skips
+    # write_value's type dispatch
+    enc_uniques = [_value_str(v) if type(v) is str else write_value(v)
+                   for v in uniques]
+    codes_in_order = uniq_c[order] % U
+    amb = np.flatnonzero(signed_zero[codes_in_order])
+    if len(amb):
+        # a signed-zero entry takes its bytes from its first row in the tile
+        flat = mat.ravel()
+        codes_in_order[amb] = len(enc_uniques) + np.arange(len(amb))
+        enc_uniques += [write_value(flat[i]) for i in first_idx[order][amb]]
+    codes_in_order = codes_in_order.tolist()
     kp = [_varint(j) for j in range(ncols)]
     payload_len = vilen.sum(axis=1) + sum(len(b) for b in kp)
     pl_u = payload_len.astype(np.uint64)
@@ -172,8 +207,6 @@ def encode_point_tiles_bulk(z: int, x_arr, y_arr, lng, lat, ids,
     assembly (O(tiles), not O(features)) and value-string assembly
     (O(distinct values)). Byte-identical to encode.encode_layer with
     canonical sorted keys — pinned by tests/test_encode_fast.py."""
-    import pandas as pd
-
     starts = np.asarray(starts, dtype=np.int64)
     ends = np.asarray(ends, dtype=np.int64)
     lens = ends - starts
@@ -324,21 +357,23 @@ def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
     - property dictionaries via the shared _props_dict_bulk (aborted
       features still intern their values, like the scalar add_feature)
 
-    Inputs: per-FEATURE arrays (x_arr/y_arr/ids/prop_cols; ``starts``/
-    ``ends`` = contiguous feature slices per tile) and flattened geometry:
+    Inputs: per-FEATURE arrays (x_arr/y_arr/ids/prop_cols, whose values
+    may be any MVT Value type; ``starts``/``ends`` = contiguous feature
+    slices per tile) and flattened geometry:
     ``verts`` (N, 2) float64, ``ring_lens`` (R,), ``ring_feat`` (R,)
     nondecreasing, ``ring_first_of_poly`` (R,) bool (exterior-ring flag;
     ignored for lines). LineString features whose single run collapses are
     aborted exactly like add_feature (write_feature.go:57-59); degenerate
     MultiLineString parts are truncated in place (write_geometry.go:160);
     MultiPoint emits one MoveTo header with the original point count and
-    drops zero-delta duplicates (write_geometry.go:338-344) — every
-    geometry type now shares this one cost model, like the reference's
-    builders.
+    drops zero-delta duplicates (write_geometry.go:338-344), and a Point
+    is a one-point MultiPoint (MakePointFloat writes the same commands,
+    :325-331) — every geometry type shares this one cost model, like the
+    reference's builders.
 
     Returns (list of layer bytes per tile, encoded-feature count per
     tile)."""
-    geom_int = {"MultiPoint": 1, "LineString": 2,
+    geom_int = {"Point": 1, "MultiPoint": 1, "LineString": 2,
                 "MultiLineString": 2}.get(geom_type, 3)
     is_poly = geom_int == 3
     is_mpoint = geom_int == 1
@@ -612,3 +647,87 @@ def flatten_geom_rows(geom_type: str, rows):
              else np.zeros((0, 2), np.float64))
     return (verts, np.asarray(ring_lens, np.int64),
             np.asarray(ring_feat, np.int64), np.asarray(first, bool))
+
+
+def flatten_geom_arrow(geom_type: str, coords):
+    """flatten_geom_rows read straight from an Arrow coords column's list
+    offsets: the same (verts, ring_lens, ring_feat, ring_first_of_poly),
+    with no per-row or per-ring Python.
+
+    ``coords`` is a ListArray ``array<array<array<double>>>`` — a
+    feature's rings (Polygon), lines (MultiLineString) or one-ring
+    polygons (MultiPolygon); LineString and MultiPoint read the first
+    inner list, Point its first point — or, for MultiPolygon only,
+    ``array<array<array<array<double>>>>`` = [polygon][ring][point][xy],
+    holes included. The column's depth, not the rows, picks the layout.
+    Every point must be an [x, y] pair; a null at any level raises, as
+    the scalar builders do on it."""
+    import pyarrow as pa
+
+    offs, arr = [], coords
+    while pa.types.is_list(arr.type):
+        if arr.null_count:
+            raise ValueError("null in coords")
+        offs.append(arr.offsets.to_numpy().astype(np.int64))
+        arr = arr.values
+    if arr.null_count:
+        raise ValueError("null coordinate in coords")
+    flat = arr.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    if len(offs) == 4 and geom_type == "MultiPolygon":
+        o_feat, o_poly, o_ring, o_pt = offs
+        p0, p1 = o_feat[0], o_feat[-1]
+        rings_per_poly = np.diff(o_poly[p0:p1 + 1])
+        if (rings_per_poly == 0).any():
+            fi = np.searchsorted(o_feat, p0 + np.argmax(rings_per_poly == 0),
+                                 "right") - 1
+            raise ValueError(f"feature {fi}: empty polygon in MultiPolygon")
+        rings = np.arange(o_poly[p0], o_poly[p1])
+        poly_feat = np.repeat(np.arange(len(o_feat) - 1), np.diff(o_feat))
+        ring_feat = np.repeat(poly_feat, rings_per_poly)
+        first = np.zeros(len(rings), bool)
+        first[o_poly[p0:p1] - o_poly[p0]] = True
+    elif len(offs) == 3:
+        o_feat, o_ring, o_pt = offs
+        nfeat = len(o_feat) - 1
+        rings_per_feat = np.diff(o_feat)
+        if geom_type in ("LineString", "MultiPoint", "Point"):
+            if (rings_per_feat == 0).any():
+                raise ValueError(f"feature {np.argmax(rings_per_feat == 0)}:"
+                                 f" empty {geom_type} coordinates")
+            rings = o_feat[:-1]
+            ring_feat = np.arange(nfeat)
+            first = np.ones(nfeat, bool)
+        elif geom_type in ("Polygon", "MultiLineString", "MultiPolygon"):
+            if geom_type == "Polygon" and (rings_per_feat == 0).any():
+                # the scalar make_polygon raises on zero rings
+                raise ValueError(f"feature {np.argmax(rings_per_feat == 0)}:"
+                                 " empty Polygon coordinates")
+            rings = np.arange(o_feat[0], o_feat[-1])
+            ring_feat = np.repeat(np.arange(nfeat), rings_per_feat)
+            first = np.ones(len(rings), bool)
+            if geom_type == "Polygon":
+                first[:] = False
+                first[o_feat[:-1] - o_feat[0]] = True
+        else:
+            raise ValueError(f"unsupported geom_type {geom_type!r}")
+    else:
+        raise ValueError(f"{geom_type} coords must be 3 list levels deep "
+                         "(4 allowed for MultiPolygon), got "
+                         f"{len(offs)}: {coords.type}")
+    ring_lens = o_ring[rings + 1] - o_ring[rings]
+    if (ring_lens == 0).any():
+        # the scalar builders raise on empty rings/lines (pts[0])
+        raise ValueError(
+            f"feature {ring_feat[np.argmax(ring_lens == 0)]}: empty ring")
+    if geom_type == "Point":
+        ring_lens = np.ones(len(rings), np.int64)
+    ring_starts = np.concatenate([[0], np.cumsum(ring_lens)[:-1]])
+    pts = (np.repeat(o_ring[rings] - ring_starts, ring_lens)
+           + np.arange(int(ring_lens.sum())))
+    base = o_pt[pts]
+    if (o_pt[pts + 1] - base != 2).any():
+        raise ValueError("coords points must be [x, y] pairs")
+    verts = np.empty((len(pts), 2), np.float64)
+    verts[:, 0] = flat[base]
+    verts[:, 1] = flat[base + 1]
+    return verts, ring_lens.astype(np.int64), ring_feat.astype(np.int64), first
