@@ -6,6 +6,9 @@
   ArrowEvalPython) — never a row-at-a-time BatchEvalPython.
 - The generic-geometry encoder is one mapInArrow route for every geometry
   type and both props schemas.
+- Every decoder (decode_tiles in each mode, prop_cols and quarantine
+  variant, the fused decoders, vertex, typed-props and header decode, and
+  the geobuf transcode) is a mapInArrow, with no MapInPandas.
 
 Queries whose *construction* triggers driver actions (the escalating kNN
 rounds, streaming runs, stateful ops) are exercised by their own tests and
@@ -67,4 +70,39 @@ def test_geojson_encode_is_one_map_in_arrow(spark, props_type):
             if ("MapInArrow" not in plan or "FlatMapGroupsInPandas" in plan
                     or "MapInPandas" in plan):
                 offenders.append((geom_type, levels))
+    assert not offenders, offenders
+
+
+def _decode_plans(spark):
+    from vector_tile_go_spark.sparkops import udfs
+    tiles = spark.createDataFrame(
+        [], "z int, x bigint, y bigint, tile_pbf binary")
+    for mode in ("props", "int", "lnglat"):
+        for prop_cols in (None, (), ("url",)):
+            for quarantine in (False, True):
+                yield (mode, prop_cols, quarantine), udfs.decode_tiles(
+                    tiles, mode=mode, prop_cols=prop_cols,
+                    quarantine=quarantine)
+    for quarantine in (False, True):
+        yield "decode_tile_stats", udfs.decode_tile_stats(
+            tiles, quarantine=quarantine)
+    yield "decode_tile_point_agg", udfs.decode_tile_point_agg(
+        tiles, lambda z, x, y, xs, ys, exts: (len(xs),), "n bigint")
+    for scale_dim in (None, 16.0):
+        yield "decode_tile_vertices", udfs.decode_tile_vertices(
+            tiles, scale_dim=scale_dim)
+    yield "decode_tile_props_typed", udfs.decode_tile_props_typed(
+        tiles, {"nk": "bigint", "name": "string"})
+    yield "tile_stats", udfs.tile_stats(tiles)
+    yield "transcode_geobuf_tiles", udfs.transcode_geobuf_tiles(
+        spark.createDataFrame(
+            [], "z int, x bigint, y bigint, geobuf binary, n_features int"))
+
+
+def test_decoders_are_map_in_arrow(spark):
+    offenders = []
+    for name, df in _decode_plans(spark):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if "MapInArrow" not in plan or "MapInPandas" in plan:
+            offenders.append(name)
     assert not offenders, offenders

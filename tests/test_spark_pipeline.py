@@ -179,6 +179,25 @@ def test_encode_null_props_match_encode_layer(spark):
         ["None", "None", "u1", "u3"]
 
 
+def _null_id_entities(spark):
+    return spark.createDataFrame(
+        [(12, 701, 1635, -38.0, 40.0, 1, "u1", "0"),
+         (12, 701, 1635, -38.01, 40.01, None, "u2", "1")],
+        "z int, x bigint, y bigint, lng double, lat double, doc_id bigint, "
+        "url string, mention_idx string")
+
+
+@pytest.mark.parametrize("encoder", ["encode_point_tiles",
+                                     "encode_point_tiles_salted"])
+def test_point_encoders_reject_null_id(spark, encoder):
+    """A null doc_id has no int64 feature id to write: the job fails with
+    ``null doc_id`` instead of writing -2^63."""
+    from vector_tile_go_spark.sparkops import udfs
+    tiles = getattr(udfs, encoder)(_null_id_entities(spark))
+    with pytest.raises(Exception, match="null doc_id"):
+        tiles.collect()
+
+
 def test_upsert_splice_multirow_existing_keys(spark):
     """An existing table with SEVERAL rows per tile key (per-layer rows)
     must splice the adds exactly once per key and keep the other layer's

@@ -216,7 +216,7 @@ def parse_layer(buf: bytes, pos: int, end: int) -> LayerFrame:
                       start, end, frame_spans, dict_spans)
 
 
-def decode_geometry_cmds(cmds: np.ndarray, geom_type: int):
+def decode_geometry_cmds(cmds, geom_type: int):
     """Command stream -> (xs, ys, ring_lens) in tile-int coords.
 
     Spec-correct walk: the cursor carries across all MoveTo/LineTo runs (see
@@ -224,106 +224,68 @@ def decode_geometry_cmds(cmds: np.ndarray, geom_type: int):
     per DeltaDim (read_feature_lazy.go:24-31); counts are trusted but
     clipped to the available parameter pairs (corrupt-tolerant like the
     reference's ``pos+1 < len(geom)`` guard, read_tile.go:250)."""
+    arr = None
+    if not isinstance(cmds, list):
+        arr = np.asarray(cmds, dtype=np.uint32)
+        cmds = arr.tolist()
     n = len(cmds)
-    if n < 64:
-        return _decode_geometry_cmds_py(
-            cmds if isinstance(cmds, list) else np.asarray(cmds).tolist(), n)
-    cmds = np.asarray(cmds, dtype=np.uint32)
     # Pass 1 walks COMMAND ints only (O(#parts), not O(#vertices)),
     # recording parameter runs and part boundaries. Because the cursor
     # carries across every MoveTo/LineTo run, the whole geometry is ONE
-    # cumulative sum over all deltas in stream order — pass 2 is a gather +
-    # zigzag + two cumsums, with no per-vertex Python.
+    # cumulative sum over all deltas in stream order.
     runs: list = []       # (param_start, n_pairs)
     part_lens: list = []  # points per part
     pos = 0
     cur = 0
     while pos < n:
-        cmd = int(cmds[pos])
+        cmd = cmds[pos]
         cmd_id = cmd & 0x7
         count = cmd >> 3
         pos += 1
-        if cmd_id == 1:  # MoveTo: starts a new part
-            if cur:
-                part_lens.append(cur)
-                cur = 0
-            avail = min(count, (n - pos) // 2)
+        if cmd_id == 1 and cur:  # MoveTo: starts a new part
+            part_lens.append(cur)
+            cur = 0
+        if cmd_id == 1 or cmd_id == 2:  # MoveTo/LineTo: parameter pairs
+            avail = min(count, (n - pos) >> 1)
             if avail:
                 runs.append((pos, avail))
                 cur += avail
             pos += avail * 2
-        elif cmd_id == 2:  # LineTo: extends the current part
-            avail = min(count, (n - pos) // 2)
-            if avail:
-                runs.append((pos, avail))
-                cur += avail
-            pos += avail * 2
-        elif cmd_id == 7:  # ClosePath: ring boundary (closing point implied)
-            pass
-        else:  # unknown command: skip (corrupt-tolerant)
-            pass
+        # ClosePath (7, closing point implied) and unknown commands
+        # (corrupt-tolerant): no parameters, skipped
     if cur:
         part_lens.append(cur)
     if not runs:
         return np.zeros(0), np.zeros(0), []
+    if n < 64:
+        # short streams (points, short lines, small rings): numpy's fixed
+        # per-call overhead dominates below ~64 command ints, so the
+        # zigzag and cursor sums run in Python
+        xs, ys = [], []
+        cx = cy = 0
+        for p, a in runs:
+            for q in range(p, p + 2 * a, 2):
+                u = cmds[q]
+                w = cmds[q + 1]
+                cx += -((u + 1) >> 1) if u & 1 else u >> 1
+                cy += -((w + 1) >> 1) if w & 1 else w >> 1
+                xs.append(cx)
+                ys.append(cy)
+        return (np.asarray(xs, dtype=np.float64),
+                np.asarray(ys, dtype=np.float64), part_lens)
+    # pass 2: a gather + zigzag + two cumsums, with no per-vertex Python
+    if arr is None:
+        arr = np.asarray(cmds, dtype=np.uint32)
     if len(runs) == 1:
         p0, a0 = runs[0]
-        params = cmds[p0:p0 + 2 * a0]
+        params = arr[p0:p0 + 2 * a0]
     else:
-        params = cmds[np.concatenate(
+        params = arr[np.concatenate(
             [np.arange(p, p + 2 * a) for p, a in runs])]
     d = tm.zigzag_decode(params)
     xs = np.cumsum(d[0::2], dtype=np.float64)
     ys = np.cumsum(d[1::2], dtype=np.float64)
     return xs, ys, part_lens
-
-
-def _decode_geometry_cmds_py(cmds: list, n: int):
-    """Pure-python twin of the vectorized walk for short command streams
-    (points, short lines) — numpy's fixed per-call overhead dominates below
-    ~64 command ints. Semantics identical: cursor carries across parts,
-    zigzag per DeltaDim, counts clipped to available pairs."""
-    xs, ys, ring_lens = [], [], []
-    cur = 0  # points in current part
-    cx = cy = 0
-    pos = 0
-    while pos < n:
-        cmd = cmds[pos]
-        cmd_id = cmd & 0x7
-        count = cmd >> 3
-        pos += 1
-        if cmd_id == 1:
-            if cur:
-                ring_lens.append(cur)
-                cur = 0
-            avail = min(count, (n - pos) >> 1)
-            for _ in range(avail):
-                a = cmds[pos]
-                b = cmds[pos + 1]
-                pos += 2
-                cx += -((a + 1) >> 1) if a & 1 else a >> 1
-                cy += -((b + 1) >> 1) if b & 1 else b >> 1
-                xs.append(cx)
-                ys.append(cy)
-                cur += 1
-        elif cmd_id == 2:
-            avail = min(count, (n - pos) >> 1)
-            for _ in range(avail):
-                a = cmds[pos]
-                b = cmds[pos + 1]
-                pos += 2
-                cx += -((a + 1) >> 1) if a & 1 else a >> 1
-                cy += -((b + 1) >> 1) if b & 1 else b >> 1
-                xs.append(cx)
-                ys.append(cy)
-                cur += 1
-        # cmd 7 (ClosePath) and unknown commands: no params, no-op
-    if cur:
-        ring_lens.append(cur)
-    if not xs:
-        return np.zeros(0), np.zeros(0), []
-    return (np.asarray(xs, dtype=np.float64),
-            np.asarray(ys, dtype=np.float64), ring_lens)
 
 
 def decode_geometry_cmds_ref_compat(cmds, geom_type: int):
@@ -403,8 +365,27 @@ def _signed_area(ring: np.ndarray) -> float:
     return float(np.sum((xj - x) * (y + yj)))
 
 
+def _read_packed(buf: bytes, pos: int, end: int) -> list:
+    """Packed varints buf[pos:end] -> ints. A feature's arrays are short
+    (tags: 2 ints per property), and on them a plain byte loop beats
+    numpy's fixed per-call overhead by ~25x; the vectorized
+    varint_decode_all only wins on long packed arrays."""
+    out = []
+    v = shift = 0
+    while pos < end:
+        b = buf[pos]
+        pos += 1
+        v |= (b & 0x7F) << shift
+        if b & 0x80:
+            shift += 7
+        else:
+            out.append(v)
+            v = shift = 0
+    return out
+
+
 def decode_feature(layer: LayerFrame, span, mode: str = "lnglat",
-                   z: int = 0, x: int = 0, y: int = 0) -> DecodedFeature | None:
+                   z: int = 0, x: int = 0, y: int = 0) -> DecodedFeature:
     """Decode one feature body. mode: 'props' | 'int' | 'lnglat'."""
     buf = layer.buf
     pos, end = span
@@ -418,21 +399,8 @@ def decode_feature(layer: LayerFrame, span, mode: str = "lnglat",
             fid, pos = read_varint(buf, pos)
         elif fieldno == 2 and wt == 2:
             n, pos = read_varint(buf, pos)
-            # tag arrays are tiny (2 ints per property): a plain byte loop
-            # beats numpy's fixed per-call overhead by ~25x here; the
-            # vectorized varint_decode_all only wins on long packed arrays
-            end_t = pos + n
-            tags = []
-            v = shift = 0
-            while pos < end_t:
-                b = buf[pos]
-                pos += 1
-                v |= (b & 0x7F) << shift
-                if b & 0x80:
-                    shift += 7
-                else:
-                    tags.append(v)
-                    v = shift = 0
+            tags = _read_packed(buf, pos, pos + n)
+            pos += n
             # dictionary join; out-of-range -> "" (read_tile.go:193-204)
             nk, nv = len(layer.keys), len(layer.values)
             for i in range(0, len(tags) - 1, 2):
@@ -461,23 +429,10 @@ def decode_feature(layer: LayerFrame, span, mode: str = "lnglat",
     span_len = geom_span[1] - geom_span[0]
     if span_len < 112:
         # small-geometry fast path (points, short lines): plain byte loop,
-        # no numpy per-call overhead (measured crossover ≈ 112 bytes)
-        g0, g1 = geom_span
-        vals = []
-        v = shift = 0
-        p = g0
-        while p < g1:
-            b = buf[p]
-            p += 1
-            v |= (b & 0x7F) << shift
-            if b & 0x80:
-                shift += 7
-            else:
-                # mask to 32 bits so corrupt oversized varints wrap exactly
-                # like the >=256-byte path's uint64->uint32 array cast
-                vals.append(v & 0xFFFFFFFF)
-                v = shift = 0
-        cmds = np.asarray(vals, dtype=np.uint32)
+        # no numpy per-call overhead (measured crossover ≈ 112 bytes);
+        # masked to 32 bits so corrupt oversized varints wrap exactly like
+        # the numpy path's uint64->uint32 array cast
+        cmds = [v & 0xFFFFFFFF for v in _read_packed(buf, *geom_span)]
     else:
         cmds = varint_decode_all(np.frombuffer(buf, np.uint8, span_len, geom_span[0]))
     xs, ys, ring_lens = decode_geometry_cmds(cmds, geom_type)
@@ -513,8 +468,9 @@ def _assemble_polygons(feat: DecodedFeature):
     to the previous polygon (sign inverted vs write side: the y-axis flips).
 
     Flat-array implementation: ring closure via a single batched np.insert,
-    all signed areas in one shoelace + add.reduceat — no per-ring stack/roll
-    (zero-length rings fall back to the per-ring twin)."""
+    all signed areas in one shoelace + add.reduceat — no per-ring stack/roll.
+    decode_geometry_cmds ends a part only when it has a point, so no ring
+    is empty and reduceat's offsets strictly increase."""
     lens = feat.ring_lens
     nr = len(lens)
     if nr == 0:
@@ -523,7 +479,7 @@ def _assemble_polygons(feat: DecodedFeature):
         feat.poly_ring_counts = []
         feat.geojson_type = "MultiPolygon"
         return
-    if nr == 1 and lens[0] > 0:
+    if nr == 1:
         # single-ring fast path (the dominant shape): one ring is always
         # one polygon — no signed area, no cumsum machinery; just closure
         xs, ys = feat.xs, feat.ys
@@ -534,9 +490,6 @@ def _assemble_polygons(feat: DecodedFeature):
             feat.ring_lens = [lens[0] + 1]
         feat.poly_ring_counts = [1]
         feat.geojson_type = "Polygon"
-        return
-    if min(lens) == 0:
-        _assemble_polygons_perring(feat)
         return
     xs, ys = feat.xs, feat.ys
     lens_a = np.asarray(lens, dtype=np.int64)
@@ -551,22 +504,19 @@ def _assemble_polygons(feat: DecodedFeature):
         lens_a = lens_a + open_mask.astype(np.int64)
         ends = np.cumsum(lens_a)
         starts = ends - lens_a
-    if nr == 1:
-        groups = [1]
-    else:
-        xprev = np.empty_like(xs)
-        xprev[1:] = xs[:-1]
-        xprev[starts] = xs[ends - 1]
-        yprev = np.empty_like(ys)
-        yprev[1:] = ys[:-1]
-        yprev[starts] = ys[ends - 1]
-        areas = np.add.reduceat((xprev - xs) * (ys + yprev), starts)
-        groups = []
-        for a in areas:
-            if a < 0 or not groups:
-                groups.append(1)
-            else:
-                groups[-1] += 1
+    xprev = np.empty_like(xs)
+    xprev[1:] = xs[:-1]
+    xprev[starts] = xs[ends - 1]
+    yprev = np.empty_like(ys)
+    yprev[1:] = ys[:-1]
+    yprev[starts] = ys[ends - 1]
+    areas = np.add.reduceat((xprev - xs) * (ys + yprev), starts)
+    groups = []
+    for a in areas:
+        if a < 0 or not groups:
+            groups.append(1)
+        else:
+            groups[-1] += 1
     feat.xs = xs
     feat.ys = ys
     feat.ring_lens = lens_a.tolist()
@@ -574,30 +524,29 @@ def _assemble_polygons(feat: DecodedFeature):
     feat.geojson_type = "Polygon" if len(groups) == 1 else "MultiPolygon"
 
 
-def _assemble_polygons_perring(feat: DecodedFeature):
-    """Per-ring twin of _assemble_polygons for the degenerate zero-length
-    ring case (reduceat needs strictly increasing offsets)."""
-    closed = []
-    for r in feat.rings():
-        if len(r) and (r[0, 0] != r[-1, 0] or r[0, 1] != r[-1, 1]):
-            r = np.vstack([r, r[:1]])
-        closed.append(r)
-    if len(closed) == 1:
-        groups = [1]
-    else:
-        groups = []
-        for r in closed:
-            if not len(r):
-                continue
-            if _signed_area(r) < 0 or not groups:
-                groups.append(1)
-            else:
-                groups[-1] += 1
-    feat.xs = np.concatenate([r[:, 0] for r in closed]) if closed else np.zeros(0)
-    feat.ys = np.concatenate([r[:, 1] for r in closed]) if closed else np.zeros(0)
-    feat.ring_lens = [len(r) for r in closed]
-    feat.poly_ring_counts = groups
-    feat.geojson_type = "Polygon" if len(groups) == 1 else "MultiPolygon"
+def _point_rows(Vu: np.ndarray):
+    """Row test of the uniform point layout on a (features, 13 + 2P)
+    matrix of one feature's varints per row -> (the matrix as int64, ok per
+    row), or None when an id is >= 2^63: legal on the wire (uint64), but
+    the int64 cast would wrap it negative while decode_feature keeps it.
+
+    The framing is positional, so besides the field tags and MoveTo(1)
+    each row's LENGTH fields must equal the minimal-varint byte widths of
+    the values in their slots (ADVICE r4): feature length, tags length,
+    geometry length. Crafted tiles and non-minimal varints fail it and go
+    through the length-driven walk."""
+    from .encode_fast import _varlen_u64
+    if bool((Vu[:, 3] >= np.uint64(1) << np.uint64(63)).any()):
+        return None
+    V = Vu.astype(np.int64)
+    VL = _varlen_u64(Vu.ravel()).reshape(Vu.shape)
+    t = Vu.shape[1] - 7  # index after tag ints
+    ok = ((V[:, 0] == 0x12) & (V[:, 2] == 0x08) & (V[:, 4] == 0x12)
+          & (V[:, t] == 0x18) & (V[:, t + 1] == 1) & (V[:, t + 2] == 0x22)
+          & (V[:, t + 4] == 9) & (V[:, 1] == VL[:, 2:].sum(axis=1))
+          & (V[:, 5] == VL[:, 6:t].sum(axis=1))
+          & (V[:, t + 3] == VL[:, t + 4:].sum(axis=1)))
+    return V, ok
 
 
 def bulk_point_layer(lf: LayerFrame):
@@ -629,19 +578,11 @@ def bulk_point_layer(lf: LayerFrame):
     if p2 < 0 or p2 % 2:
         return None
     n_props = p2 // 2
-    Vu = vals.reshape(m, per)
-    # feature ids >= 2^63 are legal on the wire (uint64); the int64 cast
-    # below would wrap them negative while decode_feature keeps them
-    # positive — fall back to the walk for such layers
-    if bool((Vu[:, 3] >= np.uint64(1) << np.uint64(63)).any()):
+    rows = _point_rows(vals.reshape(m, per))
+    if rows is None or not bool(rows[1].all()):
         return None
-    V = Vu.astype(np.int64)
+    V = rows[0]
     t = 6 + p2  # index after tag ints
-    ok = ((V[:, 0] == 0x12) & (V[:, 2] == 0x08) & (V[:, 4] == 0x12)
-          & (V[:, t] == 0x18) & (V[:, t + 1] == 1) & (V[:, t + 2] == 0x22)
-          & (V[:, t + 4] == 9))
-    if not bool(ok.all()):
-        return None
     ids = V[:, 3]
     key_idx = V[:, 6:6 + p2:2]
     val_idx = V[:, 7:7 + p2:2]
@@ -649,6 +590,78 @@ def bulk_point_layer(lf: LayerFrame):
     px = np.where(zz[:, 0] % 2 == 1, -((zz[:, 0] + 1) // 2), zz[:, 0] // 2)
     py = np.where(zz[:, 1] % 2 == 1, -((zz[:, 1] + 1) // 2), zz[:, 1] // 2)
     return ids, key_idx, val_idx, px, py, n_props
+
+
+@dataclass
+class LayerColumns:
+    """One layer's features as columns (decode_layer_columns). Feature i
+    owns the property entries ``offsets[i]:offsets[i + 1]`` of ``keys``
+    (str) and ``values`` (typed), one entry per distinct key."""
+    ids: np.ndarray           # uint64 wire id, 0 where absent
+    geom_type: np.ndarray     # int64 wire geometry type
+    geojson_type: np.ndarray  # object (str)
+    px: np.ndarray            # float64 first vertex in tile ints, NaN in
+    py: np.ndarray            # 'props' mode or for an empty geometry
+    extent: int
+    keys: np.ndarray          # object
+    values: np.ndarray        # object
+    offsets: np.ndarray       # int64, len(ids) + 1
+    errors: list              # one exception per feature left undecoded
+
+
+def decode_layer_columns(lf: LayerFrame, mode: str = "int") -> LayerColumns:
+    """The one layer decode behind every decode UDF: a LayerFrame ->
+    per-feature columns. ``mode`` 'int' reads each feature's first vertex
+    in tile ints; 'props' skips geometry.
+
+    A uniform point layer decodes in one vectorized pass
+    (bulk_point_layer); any other layer, including one with an id >= 2^63,
+    goes through the decode_feature walk, where a feature that fails to
+    decode is left out and its exception kept in ``errors``. Both follow
+    the walk's property semantics: an out-of-range tag index reads ""
+    (read_tile.go:193-204) and a repeated key keeps its last value."""
+    bulk = bulk_point_layer(lf)
+    if bulk is None:
+        return _walk_columns(lf, mode)
+    ids, key_idx, val_idx, px, py, _ = bulk
+    n, width = key_idx.shape
+    # the dictionaries, with "" for out-of-range tag indices
+    keys = np.array([*lf.keys, ""], dtype=object)
+    values = np.array([*lf.values, ""], dtype=object)
+    k = np.minimum(key_idx, len(lf.keys))
+    v = np.minimum(val_idx, len(lf.values))
+    # drop an entry when its key string comes again later in the feature
+    code = np.unique(keys, return_inverse=True)[1].reshape(-1)[k]
+    keep = np.ones((n, width), dtype=bool)
+    for j in range(width - 1):
+        keep[:, j] = ~(code[:, j + 1:] == code[:, j:j + 1]).any(axis=1)
+    if mode == "props":
+        px = py = np.full(n, np.nan)
+    return LayerColumns(
+        ids.astype(np.uint64), np.ones(n, np.int64),
+        np.full(n, "Point", dtype=object), px.astype(np.float64),
+        py.astype(np.float64), lf.extent, keys[k[keep]], values[v[keep]],
+        np.concatenate([[0], np.cumsum(keep.sum(axis=1))]).astype(np.int64),
+        [])
+
+
+def _walk_columns(lf: LayerFrame, mode: str) -> LayerColumns:
+    feats, errors = [], []
+    for span in lf.feature_spans:
+        try:
+            feats.append(decode_feature(lf, span, mode=mode))
+        except Exception as e:  # noqa: BLE001 — the caller raises or quarantines
+            errors.append(e)
+    props = [f.properties for f in feats]
+    return LayerColumns(
+        np.array([f.feature_id or 0 for f in feats], dtype=np.uint64),
+        np.array([f.geom_type for f in feats], dtype=np.int64),
+        np.array([f.geojson_type for f in feats], dtype=object),
+        np.array([f.xs[0] if len(f.xs) else np.nan for f in feats], np.float64),
+        np.array([f.ys[0] if len(f.ys) else np.nan for f in feats], np.float64),
+        lf.extent, np.array([k for p in props for k in p], dtype=object),
+        np.array([v for p in props for v in p.values()], dtype=object),
+        np.cumsum([0, *map(len, props)], dtype=np.int64), errors)
 
 
 def decode_tile(buf: bytes, z: int = 0, x: int = 0, y: int = 0,
@@ -661,9 +674,7 @@ def decode_tile(buf: bytes, z: int = 0, x: int = 0, y: int = 0,
         if layers is not None and lf.name not in layers:
             continue
         for span in lf.feature_spans:
-            f = decode_feature(lf, span, mode, z, x, y)
-            if f is not None:
-                out.append((lf.name, f))
+            out.append((lf.name, decode_feature(lf, span, mode, z, x, y)))
     return out
 
 
@@ -851,7 +862,6 @@ def bulk_point_tile_stats(bufs: list, distinct_prop: str,
     <=> string-distinct) and the tile's dictionary is duplicate-free;
     anything else — multi-frame tiles, non-uniform features, uint64 ids,
     non-string/non-ASCII values, dup dictionaries — falls back."""
-    from .encode_fast import _varlen_u64
     m = len(bufs)
     n_arr = np.zeros(m, dtype=np.int64)
     nv_arr = np.zeros(m, dtype=np.int64)
@@ -961,26 +971,11 @@ def bulk_point_tile_stats(bufs: list, distinct_prop: str,
         gfeats = feats[gsel]
         take = np.concatenate(
             [np.arange(voffs[g], voffs[g] + feats[g] * width) for g in gsel])
-        Vu = all_vals[take].reshape(-1, int(width))
-        if bool((Vu[:, 3] >= np.uint64(1) << np.uint64(63)).any()):
+        rows = _point_rows(all_vals[take].reshape(-1, int(width)))
+        if rows is None:
             continue  # uint64 ids: per-tile walk keeps them positive
-        V = Vu.astype(np.int64)
+        V, ok_rows = rows
         p2 = int(width) - 13
-        t = 6 + p2
-        ok_rows = ((V[:, 0] == 0x12) & (V[:, 2] == 0x08) & (V[:, 4] == 0x12)
-                   & (V[:, t] == 0x18) & (V[:, t + 1] == 1)
-                   & (V[:, t + 2] == 0x22) & (V[:, t + 4] == 9))
-        # Length-field validation (ADVICE r4): the framing above is purely
-        # positional, so confirm the wire LENGTH fields agree with the
-        # minimal-varint byte widths of the values actually in each slot —
-        # payload_len == bytes of the packed tag varints, geom_len ==
-        # bytes of (MoveTo cmd + 2 zigzags), parts_len == bytes of the
-        # whole feature body after it. Any disagreement (crafted tiles,
-        # non-minimal varints) falls back to the length-driven walk.
-        VL = _varlen_u64(Vu.ravel()).reshape(Vu.shape)
-        ok_rows &= ((V[:, 1] == VL[:, 2:].sum(axis=1))
-                    & (V[:, 5] == (VL[:, 6:6 + p2].sum(axis=1) if p2 else 0))
-                    & (V[:, t + 3] == VL[:, t + 4:].sum(axis=1)))
         row_tile = np.repeat(np.arange(len(gsel)), gfeats)
         row_offs = np.concatenate([[0], np.cumsum(gfeats)])
         grp_ok = np.logical_and.reduceat(ok_rows, row_offs[:-1]) \

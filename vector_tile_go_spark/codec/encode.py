@@ -24,7 +24,7 @@ import numpy as np
 
 from .. import tilemath as tm
 from .values import write_value
-from .wire import encode_varint, varint_encode_array, write_packed_uint32
+from .wire import encode_varint, write_packed_uint32
 
 GEOM_TYPE_INT = {
     "Point": 1, "MultiPoint": 1,
@@ -329,76 +329,4 @@ def encode_layer(features, z: int, x: int, y: int, name: str,
     for f in features:
         enc.add_feature(f["type"], f["coordinates"], f.get("properties"),
                         f.get("id"))
-    return enc.flush()
-
-
-# ---------------------------------------------------------------------------
-# bulk vectorized path for point-only layers (the web-scale hot path)
-# ---------------------------------------------------------------------------
-
-def encode_point_layer(lngs: np.ndarray, lats: np.ndarray, ids: np.ndarray,
-                       prop_arrays: dict[str, np.ndarray],
-                       z: int, x: int, y: int, name: str,
-                       extent: int = 4096, version: int = 2) -> bytes:
-    """Fully vectorized encoder for a layer of Point features.
-
-    Numpy end-to-end: one projection pass, factorized dictionaries, bulk
-    varint encoding, single buffer assembly. Byte-identical to running
-    ``encode_layer`` feature-by-feature with sorted property keys; exists
-    because point layers dominate the geo-entity tiling workload and the
-    general path's per-feature Python loop would be the bottleneck at scale.
-    """
-    import pandas as pd
-
-    n = len(lngs)
-    cur = Cursor(z, x, y, extent, extent_clamp=True)
-    pts = cur.tile_ints(np.stack([np.asarray(lngs, np.float64),
-                                  np.asarray(lats, np.float64)], axis=1))
-    xv, yv = pts[:, 0], pts[:, 1]
-    zzx = tm.zigzag_encode(xv.astype(np.int32)).astype(np.uint64)
-    zzy = tm.zigzag_encode(yv.astype(np.int32)).astype(np.uint64)
-    origin = (xv == 0) & (yv == 0)  # bare-header geometry (MakePointFloat)
-
-    enc = LayerEncoder(z, x, y, name, extent, version)
-    # dictionaries via factorize (order-preserving first-seen, like
-    # write_layer.go:95-112) over sorted key names; value dictionary is
-    # shared across keys, first-seen in row-major (row, sorted-key) order —
-    # identical to running add_feature row by row in canonical mode.
-    keynames = sorted(prop_arrays.keys())
-    for k in keynames:
-        enc._key_idx(k)
-    cols = {k: pd.Series(prop_arrays[k]).astype(str).to_numpy() for k in keynames}
-    if keynames:
-        flat = np.empty(n * len(keynames), dtype=object)
-        for j, k in enumerate(keynames):
-            flat[j::len(keynames)] = cols[k]
-        codes, uniques = pd.factorize(pd.Series(flat))
-        for u in uniques:
-            enc._value_idx(str(u))
-        tag_arr = np.empty(n * len(keynames) * 2, dtype=np.uint64)
-        tag_arr[0::2] = np.tile(np.arange(len(keynames), dtype=np.uint64), n)
-        tag_arr[1::2] = codes.astype(np.uint64)
-        tag_arr = tag_arr.reshape(n, len(keynames) * 2)
-    else:
-        tag_arr = np.zeros((n, 0), dtype=np.uint64)
-
-    # assemble per-feature bytes (vectorized varints, python join per feature)
-    ids = np.asarray(ids, dtype=np.uint64)
-    out = bytearray()
-    geomtype_bytes = bytes([24, 1])
-    for i in range(n):
-        parts = bytearray()
-        if ids[i] != 0:
-            parts += bytes([8]) + encode_varint(int(ids[i]))
-        if tag_arr.shape[1]:
-            parts += bytes([18]) + write_packed_uint32(tag_arr[i])
-        parts += geomtype_bytes
-        if origin[i]:
-            cmds = np.array([9], dtype=np.uint64)
-        else:
-            cmds = np.array([9, zzx[i], zzy[i]], dtype=np.uint64)
-        parts += bytes([34]) + write_packed_uint32(cmds)
-        out += bytes([18]) + encode_varint(len(parts)) + parts
-    enc.features = out
-    enc.n_features = n
     return enc.flush()

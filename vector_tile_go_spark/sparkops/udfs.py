@@ -7,7 +7,9 @@ anywhere. The encoders all take the same plan: one repartition on the
 tile key, a sortWithinPartitions, then ``mapInArrow`` over one sorted-batch
 carry protocol (``_sorted_tile_groups``) feeding a vectorized kernel, so
 no pandas frame is built on either side of the encode boundary. The
-decoders are ``mapInPandas``.
+decoders are ``mapInArrow`` too: each decodes its tiles' layers through
+the one layer decode (``codec.decode.decode_layer_columns``) or its own
+kernel, and builds its output RecordBatch from the columns.
 
 Scale notes (the 100 TB story):
 - encode shuffles once on (z, x, y) — the same explicit boundary the
@@ -24,7 +26,6 @@ Scale notes (the 100 TB story):
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -120,6 +121,8 @@ def _point_tiles(rb, starts, ends, layer_name: str,
     def col(c):
         return rb.column(c).to_numpy(zero_copy_only=False)
 
+    if rb.column(id_col).null_count:
+        raise ValueError(f"null {id_col}")  # no int64 id to write
     bufs = encode_point_tiles_bulk(
         col("z"), col("x"), col("y"), col("lng"), col("lat"),
         np.asarray(col(id_col), np.int64),
@@ -193,6 +196,74 @@ def encode_point_tiles_salted(entities: DataFrame, layer_name: str = "geo",
                     .alias("tile_pbf"), "n_features"))
 
 
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema of a Spark DDL schema, for a mapInArrow output."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+    return to_arrow_schema(DataType.fromDDL(ddl))
+
+
+def _record_batch(schema: pa.Schema, cols: dict) -> pa.RecordBatch:
+    """One mapInArrow output batch from ``cols`` (name -> array or
+    sequence), each cast to its field's type. As in a pandas UDF's output,
+    None and NaN read as null."""
+    return pa.RecordBatch.from_arrays(
+        [c.cast(f.type) if isinstance(c := cols[f.name], pa.Array)
+         else pa.array(c, type=f.type, from_pandas=True) for f in schema],
+        schema=schema)
+
+
+def _tile_keys(rb, rows=None):
+    """z, x, y of a tile batch as int64 arrays; of ``rows`` only, if given."""
+    keys = [np.asarray(rb.column(c).to_numpy(zero_copy_only=False), np.int64)
+            for c in ("z", "x", "y")]
+    if rows is None:
+        return keys
+    rows = np.asarray(rows, np.int64)
+    return [k[rows] for k in keys]
+
+
+def _feature_ids(ids: np.ndarray) -> pa.Array:
+    # uint64 wire ids as bigint: 0 (absent) is null, ids >= 2^63 keep
+    # their 64 bits, the inverse of the encoders' negative-id wrap
+    return pa.array(ids.view(np.int64), mask=ids == 0)
+
+
+def _layer_tables(bufs, mode: str, layers, quarantine: bool):
+    """Every selected layer of tiles ``bufs`` (None tiles skipped) through
+    decode_layer_columns: yields (index, layer name, LayerColumns). Without
+    ``quarantine`` the first tile or feature that fails to decode raises;
+    with it, such a tile yields (index, None, exception) and each
+    LayerColumns keeps its feature errors."""
+    from ..codec.decode import decode_layer_columns, parse_tile
+    for i, buf in enumerate(bufs):
+        if buf is None:
+            continue
+        try:
+            decoded = [(lf.name, decode_layer_columns(lf, mode))
+                       for lf in parse_tile(buf)
+                       if layers is None or lf.name in layers]
+        except Exception as e:  # noqa: BLE001 — quarantine, not crash
+            if not quarantine:
+                raise
+            yield i, None, e
+            continue
+        for name, lc in decoded:
+            if lc.errors and not quarantine:
+                raise lc.errors[0]
+            yield i, name, lc
+
+
+def _entries(lcs):
+    """The property entries of layers ``lcs`` end to end: (keys, values,
+    entries per feature)."""
+    empty = np.zeros(0, object)
+    return (np.concatenate([empty, *(lc.keys for lc in lcs)]),
+            np.concatenate([empty, *(lc.values for lc in lcs)]),
+            np.concatenate([np.zeros(0, np.int64),
+                            *(np.diff(lc.offsets) for lc in lcs)]))
+
+
 def decode_tiles(tiles: DataFrame, mode: str = "lnglat",
                  layers: list[str] | None = None,
                  prop_cols: tuple[str, ...] | None = None,
@@ -206,217 +277,138 @@ def decode_tiles(tiles: DataFrame, mode: str = "lnglat",
     (README.md:34) pushed into the UDF; flat columns skip the Arrow/JVM map
     builders, which dominate wide decodes.
 
-    ``quarantine``: corrupt tiles become rows with the ``error`` column set
-    (null feature fields) instead of failing the stage — the distributed
-    form of the reference's per-tile panic/recover (read_tile.go:79-84)."""
-    want_geom = mode != "props"
-    # decode to tile ints; inverse-project the whole Arrow batch in ONE
-    # vectorized call (the per-feature Project of the reference,
-    # read_feature_lazy.go:54-63, amortized batch-wide)
-    inner_mode = "int" if want_geom else "props"
-
-    def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .. import tilemath as tm
-        from ..codec.decode import bulk_point_layer, decode_feature, parse_tile
-        for pdf in batches:
-            # Two accumulators, merged IN ORDER at batch end: bulk point
-            # layers append whole numpy segments (no per-feature Python —
-            # the r4 VERDICT's remaining interpreter cost on full-feature
-            # decodes); the per-feature walk and error rows append scalars,
-            # flushed into a segment whenever a bulk segment arrives.
-            segs: list[dict] = []
-            cz, cx, cy, clay, cid, cgt, cgj = [], [], [], [], [], [], []
-            cpx, cpy, cext, cprops, cerr = [], [], [], [], []
-            pcols = {c: [] for c in (prop_cols or ())}
-
-            def flush_scalar():
-                if not cz:
-                    return
-                seg = {"z": np.asarray(cz, np.int64),
-                       "x": np.asarray(cx, np.int64),
-                       "y": np.asarray(cy, np.int64),
-                       "layer": np.asarray(clay, object),
-                       "fid": np.asarray(cid, object),
-                       "gt": np.asarray(cgt, object),
-                       "gj": np.asarray(cgj, object),
-                       "px": np.asarray(cpx, np.float64),
-                       "py": np.asarray(cpy, np.float64),
-                       "ext": np.asarray(cext, np.int64),
-                       "err": np.asarray(cerr, object)}
-                if prop_cols is None:
-                    seg["props"] = np.asarray(cprops, object)
-                else:
-                    for c in prop_cols:
-                        seg[c] = np.asarray(pcols[c], object)
-                segs.append(seg)
-                for lst in (cz, cx, cy, clay, cid, cgt, cgj, cpx, cpy,
-                            cext, cprops, cerr, *pcols.values()):
-                    lst.clear()
-
-            def emit_error(z, x, y, msg):
-                # corrupt-tile quarantine (SURVEY.md §4: the reference's
-                # panic/recover per-tile isolation, read_tile.go:79-84,
-                # becomes an error row instead of a failed job — at 10^12
-                # docs one bad tile must not kill the stage)
-                cz.append(z)
-                cx.append(x)
-                cy.append(y)
-                clay.append(None)
-                cid.append(None)
-                cgt.append(None)
-                cgj.append(None)
-                cpx.append(np.nan)
-                cpy.append(np.nan)
-                cext.append(4096)
-                cerr.append(msg[:200])
-                if prop_cols is None:
-                    cprops.append({})
-                else:
-                    for c in prop_cols:
-                        pcols[c].append(None)
-
-            for z, x, y, buf in zip(pdf["z"], pdf["x"], pdf["y"], pdf["tile_pbf"]):
-                if buf is None:
-                    continue
-                z, x, y = int(z), int(x), int(y)
-                try:
-                    frames = parse_tile(bytes(buf))
-                except Exception as e:  # noqa: BLE001 — quarantine, not crash
-                    if quarantine:
-                        emit_error(z, x, y, f"parse: {e!r}")
-                        continue
-                    raise
-                for lf in frames:
-                    if layers is not None and lf.name not in layers:
-                        continue
-                    bulk = bulk_point_layer(lf)
-                    if bulk is not None:
-                        ids, key_idx, val_idx, px, py, n_props = bulk
-                        n = len(ids)
-                        # uniform key layout + in-range dictionary indices
-                        # required for the vectorized join (our encoder
-                        # always satisfies both; foreign tiles fall back)
-                        if (n and bool((key_idx == key_idx[0]).all())
-                                and bool((key_idx[0] < len(lf.keys)).all())
-                                and bool((val_idx < len(lf.values)).all())):
-                            flush_scalar()
-                            fid_obj = ids.astype(object)
-                            fid_obj[ids == 0] = None
-                            seg = {
-                                "z": np.full(n, z, np.int64),
-                                "x": np.full(n, x, np.int64),
-                                "y": np.full(n, y, np.int64),
-                                "layer": np.full(n, lf.name, object),
-                                "fid": fid_obj,
-                                "gt": np.full(n, 1, object),
-                                "gj": np.full(n, "Point", object),
-                                "err": np.full(n, None, object),
-                            }
-                            if want_geom:
-                                seg["px"] = px.astype(np.float64)
-                                seg["py"] = py.astype(np.float64)
-                                seg["ext"] = np.full(n, lf.extent, np.int64)
-                            else:
-                                # match the per-feature walk: props mode
-                                # never exposes coords (lng/lat = NaN)
-                                seg["px"] = np.full(n, np.nan)
-                                seg["py"] = np.full(n, np.nan)
-                                seg["ext"] = np.full(n, 4096, np.int64)
-                            # str() once per DICTIONARY entry, then gather —
-                            # O(distinct values), not O(features x props)
-                            vals_str = np.array([str(v) for v in lf.values],
-                                                dtype=object)
-                            names0 = [lf.keys[k] if k < len(lf.keys) else ""
-                                      for k in key_idx[0].tolist()]
-                            if prop_cols is None:
-                                colvals = [vals_str[val_idx[:, j]]
-                                           for j in range(n_props)]
-                                seg["props"] = np.array(
-                                    [{names0[j]: colvals[j][r]
-                                      for j in range(n_props)}
-                                     for r in range(n)], dtype=object)
-                            else:
-                                for c in prop_cols:
-                                    if c in names0:
-                                        j = names0.index(c)
-                                        seg[c] = vals_str[val_idx[:, j]]
-                                    else:
-                                        seg[c] = np.full(n, None, object)
-                            segs.append(seg)
-                            continue
-                    for span in lf.feature_spans:
-                        try:
-                            f = decode_feature(lf, span, mode=inner_mode)
-                        except Exception as e:  # noqa: BLE001
-                            if quarantine:
-                                emit_error(z, x, y, f"feature: {e!r}")
-                                continue
-                            raise
-                        if f is None:
-                            continue
-                        cz.append(z)
-                        cx.append(x)
-                        cy.append(y)
-                        clay.append(lf.name)
-                        cid.append(f.feature_id)
-                        cgt.append(f.geom_type)
-                        cgj.append(f.geojson_type)
-                        cerr.append(None)
-                        if want_geom and len(f.xs):
-                            cpx.append(f.xs[0])
-                            cpy.append(f.ys[0])
-                            cext.append(lf.extent)
-                        else:
-                            cpx.append(np.nan)
-                            cpy.append(np.nan)
-                            cext.append(4096)
-                        p = f.properties
-                        if prop_cols is None:
-                            cprops.append({k: str(v) for k, v in p.items()})
-                        else:
-                            for c in prop_cols:
-                                v = p.get(c)
-                                pcols[c].append(None if v is None else str(v))
-            flush_scalar()
-            if not segs:
-                continue  # empty batch: yielding nothing beats fighting
-                # pandas' float64 default dtype for empty object columns
-            col = {k: np.concatenate([s[k] for s in segs])
-                   for k in segs[0]}
-            if mode == "lnglat":
-                lngs, lats = tm.project_tile_to_lnglat(
-                    col["px"], col["py"], col["z"],
-                    col["x"].astype(np.float64),
-                    col["y"].astype(np.float64), col["ext"])
-            else:
-                lngs, lats = col["px"], col["py"]
-            data = {"z": pd.Series(col["z"], dtype="int32"),
-                    "x": pd.Series(col["x"], dtype="int64"),
-                    "y": pd.Series(col["y"], dtype="int64"),
-                    "layer": col["layer"], "feature_id": col["fid"],
-                    "geom_type": col["gt"],
-                    "geojson_type": col["gj"], "lng": lngs, "lat": lats}
-            if prop_cols is None:
-                data["properties"] = col["props"]
-            else:
-                for c in prop_cols:
-                    data[c] = col[c]
-            if quarantine:
-                data["error"] = col["err"]
-            yield pd.DataFrame(data)
-
+    ``quarantine``: a corrupt tile, and each feature that fails to decode,
+    becomes a row with the ``error`` column set (null feature fields)
+    instead of failing the stage — the distributed form of the reference's
+    per-tile panic/recover (read_tile.go:79-84)."""
     if prop_cols is None:
-        schema = FEATURE_SCHEMA
+        ddl = FEATURE_SCHEMA
     elif prop_cols:
-        schema = FEATURE_SCHEMA.replace(
+        ddl = FEATURE_SCHEMA.replace(
             "properties map<string,string>",
             ", ".join(f"{c} string" for c in prop_cols))
     else:  # properties projected away entirely
-        schema = FEATURE_SCHEMA.replace(
-            ", properties map<string,string>", "")
+        ddl = FEATURE_SCHEMA.replace(", properties map<string,string>", "")
     if quarantine:
-        schema += ", error string"
-    return tiles.mapInPandas(decode_batch, schema)
+        ddl += ", error string"
+    schema = _arrow_schema(ddl)
+    # decode to tile ints; inverse-project the whole Arrow batch in ONE
+    # vectorized call (the per-feature Project of the reference,
+    # read_feature_lazy.go:54-63, amortized batch-wide)
+    inner_mode = "props" if mode == "props" else "int"
+
+    def run(batches):
+        for rb in batches:
+            rows, names, lcs, err_rows, errs = [], [], [], [], []
+            for i, name, lc in _layer_tables(
+                    rb.column("tile_pbf").to_pylist(), inner_mode, layers,
+                    quarantine):
+                if name is None:
+                    err_rows.append(i)
+                    errs.append(f"parse: {lc!r}"[:200])
+                    continue
+                rows.append(i)
+                names.append(name)
+                lcs.append(lc)
+                err_rows += [i] * len(lc.errors)
+                errs += [f"feature: {e!r}"[:200] for e in lc.errors]
+            if lcs or errs:
+                yield _feature_batch(rb, rows, names, lcs, err_rows, errs,
+                                     mode, prop_cols, schema)
+
+    return tiles.mapInArrow(run, ddl)
+
+
+def _feature_batch(rb, rows, names, lcs, err_rows, errs, mode, prop_cols,
+                   schema):
+    """decode_tiles' output for one input batch: the features of layers
+    ``lcs`` (of tile rows ``rows``), then one row per error in ``errs``."""
+    from .. import tilemath as tm
+    counts = np.array([len(lc.ids) for lc in lcs], np.int64)
+    n_feat, n_err = int(counts.sum()), len(errs)
+    n = n_feat + n_err
+
+    def cat(attr, fill, dtype):
+        return np.concatenate([np.zeros(0, dtype),
+                               *(getattr(lc, attr) for lc in lcs),
+                               np.full(n_err, fill, dtype)])
+
+    z, x, y = _tile_keys(rb, np.concatenate(
+        [np.repeat(np.asarray(rows, np.int64), counts), err_rows]))
+    lng, lat = cat("px", np.nan, np.float64), cat("py", np.nan, np.float64)
+    if mode == "lnglat":
+        extent = np.repeat([lc.extent for lc in lcs] + [4096], [*counts, n_err])
+        lng, lat = tm.project_tile_to_lnglat(lng, lat, z, x, y, extent)
+    is_err = np.arange(n) >= n_feat
+    cols = {"z": z, "x": x, "y": y,
+            "layer": np.repeat(np.array([*names, None], object),
+                               [*counts, n_err]),
+            "feature_id": _feature_ids(cat("ids", 0, np.uint64)),
+            "geom_type": pa.array(cat("geom_type", 0, np.int64), pa.int32(),
+                                  mask=is_err),
+            "geojson_type": cat("geojson_type", None, object),
+            "lng": lng, "lat": lat,
+            "error": np.array([None] * n_feat + errs, object)}
+    keys, values, lens = _entries(lcs)
+    lens = np.concatenate([lens, np.zeros(n_err, np.int64)])
+    if prop_cols is None:
+        cols["properties"] = pa.MapArray.from_arrays(
+            pa.array(np.concatenate([[0], np.cumsum(lens)]), pa.int32()),
+            pa.array(keys, pa.string()),
+            pa.array([str(v) for v in values], pa.string()),
+            type=schema.field("properties").type)
+    else:
+        entry_row = np.repeat(np.arange(n), lens)
+        for c in prop_cols:
+            hit = keys == c
+            col = np.full(n, None, object)
+            col[entry_row[hit]] = [str(v) for v in values[hit]]
+            cols[c] = col
+    return _record_batch(schema, cols)
+
+
+# decode_tile_stats' size router: the cross-tile kernel wins where the
+# per-tile walk's fixed numpy setup dominates — SPARSE tiles (few
+# features). On dense tiles (KBs of features each) the walk is already
+# amortized and the kernel's big streaming temporaries lose (this host's
+# guest kernel inflates sustained streaming passes ~10x, BASELINE.md
+# r3/r4). Each kernel call takes at most BULK_STATS_CHUNK tiles and about
+# BULK_STATS_BYTES wire bytes: its int64 matrices expand ~30x, so a chunk's
+# temporaries stay ~8 MB, cache-adjacent.
+BULK_STATS_MAX_TILE = 4096
+BULK_STATS_CHUNK = 1024
+BULK_STATS_BYTES = 1 << 18
+
+
+def _bulk_tile_stats(bufs, distinct_prop: str, layers):
+    """bulk_point_tile_stats over the batch's tiles of at most
+    BULK_STATS_MAX_TILE bytes, chunk by chunk: (ns, nvs, handled)."""
+    from ..codec.decode import bulk_point_tile_stats
+    ns = np.zeros(len(bufs), dtype=np.int64)
+    nvs = np.zeros(len(bufs), dtype=np.int64)
+    handled = np.zeros(len(bufs), dtype=bool)
+    small = [i for i, b in enumerate(bufs)
+             if b is not None and len(b) <= BULK_STATS_MAX_TILE]
+    lo = 0
+    while lo < len(small):
+        hi, acc = lo, 0
+        while (hi < len(small) and hi - lo < BULK_STATS_CHUNK
+               and acc < BULK_STATS_BYTES):
+            acc += len(bufs[small[hi]])
+            hi += 1
+        sel = small[lo:hi]
+        lo = hi
+        # Any kernel exception degrades this chunk to the per-tile
+        # decode (handled stays False) — one corrupt tile must never fail
+        # the Spark task (ADVICE r4 high: decode_tile_stats' per-tile
+        # isolation contract).
+        try:
+            cns, cnvs, ch = bulk_point_tile_stats(
+                [bufs[i] for i in sel], distinct_prop, layers)
+        except Exception:  # noqa: BLE001 — isolate chunk
+            continue
+        ns[sel], nvs[sel], handled[sel] = cns, cnvs, ch
+    return ns, nvs, handled
 
 
 def decode_tile_stats(tiles: DataFrame, layers: list[str] | None = None,
@@ -444,136 +436,42 @@ def decode_tile_stats(tiles: DataFrame, layers: list[str] | None = None,
     ``quarantine``: corrupt tiles become zero-count rows with ``error``
     set instead of failing the stage — same isolation contract as
     ``decode_tiles(quarantine=True)`` (read_tile.go:79-84 at scale)."""
-
-    def tile_counts(buf: bytes) -> tuple[int, int]:
-        from ..codec.decode import bulk_point_layer, decode_feature, parse_tile
-        n = 0
-        vals: set = set()
-        for lf in parse_tile(buf):
-            if layers is not None and lf.name not in layers:
-                continue
-            bulk = bulk_point_layer(lf)
-            if bulk is not None:
-                ids, key_idx, val_idx, _, _, n_props = bulk
-                if (len(ids) and bool((key_idx == key_idx[0]).all())
-                        and bool((key_idx[0] < len(lf.keys)).all())
-                        and bool((val_idx < len(lf.values)).all())):
-                    n += len(ids)
-                    names0 = [lf.keys[k] for k in key_idx[0].tolist()]
-                    if distinct_prop in names0:
-                        j = names0.index(distinct_prop)
-                        varr = np.asarray(lf.values, dtype=object)
-                        # distinct over unique dictionary indices, then map
-                        # to values (robust to foreign tiles with
-                        # duplicated dictionary entries)
-                        for v in varr[np.unique(val_idx[:, j])]:
-                            if v is not None:
-                                vals.add(str(v))
-                    continue
-            for span in lf.feature_spans:
-                f = decode_feature(lf, span, mode="props")
-                if f is None:
-                    continue
-                n += 1
-                v = f.properties.get(distinct_prop)
-                if v is not None:
-                    vals.add(str(v))
-        return n, len(vals)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-
-        from ..codec.decode import bulk_point_tile_stats
-        use_bulk = os.environ.get("SPARK_GRAFT_BULK_DECODE", "1") != "0"
-        for pdf in batches:
-            # cross-tile fused fast path: one varint pass over the whole
-            # batch's conforming tiles (per-tile numpy setup amortized —
-            # the decode-side twin of the bulk encoder)
-            keep = [(int(z), int(x), int(y), bytes(buf))
-                    for z, x, y, buf in zip(pdf["z"], pdf["x"], pdf["y"],
-                                            pdf["tile_pbf"])
-                    if buf is not None]
-            if not keep:
-                continue
-            bufs = [r[3] for r in keep]
-            if use_bulk:
-                # The batch kernel wins where the per-tile walk's fixed
-                # numpy setup dominates — SPARSE tiles (few features). On
-                # dense tiles (KBs of features each) the walk is already
-                # amortized and the kernel's big streaming temporaries
-                # lose (this sandbox's guest kernel inflates sustained
-                # streaming passes ~10x, BASELINE.md r3/r4). Route by
-                # tile size; chunk the sparse set by tiles AND bytes so
-                # the working set stays cache-resident.
-                max_tile = int(os.environ.get(
-                    "SPARK_GRAFT_BULK_DECODE_MAX_TILE", "4096"))
-                chunk = int(os.environ.get("SPARK_GRAFT_BULK_DECODE_CHUNK",
-                                           "1024"))
-                # 256 KB of wire bytes per chunk: the kernel's int64
-                # matrices expand ~30x, so this keeps each chunk's
-                # temporaries ~8 MB (cache-adjacent, under the host's
-                # streaming-pass inflation threshold)
-                byte_budget = int(os.environ.get(
-                    "SPARK_GRAFT_BULK_DECODE_BYTES", str(1 << 18)))
-                ns = np.zeros(len(bufs), dtype=np.int64)
-                nvs = np.zeros(len(bufs), dtype=np.int64)
-                handled = np.zeros(len(bufs), dtype=bool)
-                small = [i for i, b in enumerate(bufs) if len(b) <= max_tile]
-                lo = 0
-                while lo < len(small):
-                    hi, acc = lo, 0
-                    while hi < len(small) and hi - lo < chunk and \
-                            acc < byte_budget:
-                        acc += len(bufs[small[hi]])
-                        hi += 1
-                    sel = small[lo:hi]
-                    # Any kernel exception degrades this chunk to the
-                    # quarantined per-tile walk (handled stays False) —
-                    # one corrupt tile must never fail the Spark task
-                    # (ADVICE r4 high: decode_tile_stats' per-tile
-                    # isolation contract).
-                    try:
-                        cns, cnvs, ch = bulk_point_tile_stats(
-                            [bufs[i] for i in sel], distinct_prop, layers)
-                    except Exception:  # noqa: BLE001 — isolate chunk
-                        lo = hi
-                        continue
-                    for k, i in enumerate(sel):
-                        ns[i], nvs[i], handled[i] = cns[k], cnvs[k], ch[k]
-                    lo = hi
-            else:
-                ns = nvs = None
-                handled = np.zeros(len(keep), dtype=bool)
-            rows = []
-            for i, (z, x, y, buf) in enumerate(keep):
-                if handled[i]:
-                    if ns[i]:
-                        rows.append((z, x, y, int(ns[i]), int(nvs[i]), None)
-                                    if quarantine else
-                                    (z, x, y, int(ns[i]), int(nvs[i])))
-                    continue
-                if quarantine:
-                    try:
-                        n, nv = tile_counts(buf)
-                    except Exception as e:  # noqa: BLE001 — isolate tile
-                        rows.append((z, x, y, 0, 0, f"decode: {e!r}"[:200]))
-                        continue
-                    if n:
-                        rows.append((z, x, y, n, nv, None))
-                else:
-                    n, nv = tile_counts(buf)
-                    if n:
-                        rows.append((z, x, y, n, nv))
-            if rows:
-                cols = ["z", "x", "y", "n_features", out_col]
-                if quarantine:
-                    cols.append("error")
-                yield pd.DataFrame(rows, columns=cols)
-
-    schema = f"z int, x bigint, y bigint, n_features bigint, {out_col} bigint"
+    ddl = f"z int, x bigint, y bigint, n_features bigint, {out_col} bigint"
     if quarantine:
-        schema += ", error string"
-    return tiles.mapInPandas(stats, schema)
+        ddl += ", error string"
+    schema = _arrow_schema(ddl)
+
+    def stats(batches):
+        for rb in batches:
+            bufs = rb.column("tile_pbf").to_pylist()
+            ns, nvs, handled = _bulk_tile_stats(bufs, distinct_prop, layers)
+            # the tiles the kernel left: count and distinct over their
+            # layer columns
+            left = np.flatnonzero(~handled).tolist()
+            vals = {i: set() for i in left}
+            errs = {}
+            for k, name, lc in _layer_tables([bufs[i] for i in left],
+                                             "props", layers, quarantine):
+                i = left[k]
+                err = lc if name is None else next(iter(lc.errors), None)
+                if err is not None:
+                    errs.setdefault(i, f"decode: {err!r}"[:200])
+                if i in errs:
+                    continue
+                ns[i] += len(lc.ids)
+                vals[i].update(str(v) for v in
+                               lc.values[lc.keys == distinct_prop]
+                               if v is not None)
+            for i in left:
+                ns[i], nvs[i] = (0, 0) if i in errs else (ns[i], len(vals[i]))
+            rows = [i for i in range(len(bufs)) if ns[i] or i in errs]
+            if rows:
+                z, x, y = _tile_keys(rb, rows)
+                yield _record_batch(schema, {
+                    "z": z, "x": x, "y": y, "n_features": ns[rows],
+                    out_col: nvs[rows], "error": [errs.get(i) for i in rows]})
+
+    return tiles.mapInArrow(stats, ddl)
 
 
 def decode_tile_point_agg(tiles: DataFrame, agg_fn, agg_schema: str,
@@ -587,62 +485,43 @@ def decode_tile_point_agg(tiles: DataFrame, agg_fn, agg_schema: str,
     can ride this without paying the one-row-per-feature Arrow return
     (the decode-return scaling bottleneck, BASELINE.md §scaling).
 
-    Coordinate semantics match decode_tiles(mode='int'): point layers via
-    the bulk decoder, other features contribute their first vertex, and
-    empty geometries contribute NaN (so counts include them, coordinate
-    predicates exclude them — same as the unfused groupBy plan).
+    Coordinate semantics match decode_tiles(mode='int'): every feature
+    contributes its first vertex, and empty geometries contribute NaN (so
+    counts include them, coordinate predicates exclude them — same as the
+    unfused groupBy plan).
 
     INPUT CONTRACT (same as decode_tile_stats): ONE row per (z, x, y)
     tile key. The aggregate runs per input ROW, not per key — feeding a
     key split across multiple rows yields duplicate (z, x, y) output
     rows, diverging from the unfused decode+groupBy plan. Composite
     partial-union tiles first (sparkops.compositing.composite)."""
+    ddl = f"z int, x bigint, y bigint, {agg_schema}"
+    schema = _arrow_schema(ddl)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec.decode import bulk_point_layer, decode_feature, parse_tile
-        for pdf in batches:
-            rows = []
-            for z, x, y, buf in zip(pdf["z"], pdf["x"], pdf["y"],
-                                    pdf["tile_pbf"]):
-                if buf is None:
+    def run(batches):
+        for rb in batches:
+            zs, xs, ys = _tile_keys(rb)
+            per_tile: dict = {}
+            for i, _, lc in _layer_tables(rb.column("tile_pbf").to_pylist(),
+                                          "int", layers, False):
+                per_tile.setdefault(i, []).append(lc)
+            rows, aggs = [], []
+            for i, lcs in per_tile.items():
+                if not sum(len(lc.ids) for lc in lcs):
                     continue
-                z, x, y = int(z), int(x), int(y)
-                xs_parts, ys_parts, ext_parts = [], [], []
-                for lf in parse_tile(bytes(buf)):
-                    if layers is not None and lf.name not in layers:
-                        continue
-                    bulk = bulk_point_layer(lf)
-                    if bulk is not None:
-                        # coords only: the dictionary-uniformity checks of
-                        # the props decoders don't apply here
-                        px, py = bulk[3], bulk[4]
-                        xs_parts.append(np.asarray(px, dtype=np.float64))
-                        ys_parts.append(np.asarray(py, dtype=np.float64))
-                        ext_parts.append(np.full(len(px), lf.extent,
-                                                 dtype=np.float64))
-                        continue
-                    for span in lf.feature_spans:
-                        f = decode_feature(lf, span, mode="int")
-                        if f is None:
-                            continue
-                        if len(f.xs):
-                            xs_parts.append(np.asarray(f.xs[:1], np.float64))
-                            ys_parts.append(np.asarray(f.ys[:1], np.float64))
-                        else:
-                            xs_parts.append(np.array([np.nan]))
-                            ys_parts.append(np.array([np.nan]))
-                        ext_parts.append(np.array([lf.extent], np.float64))
-                if not xs_parts:
-                    continue
-                rows.append((z, x, y, *agg_fn(
-                    z, x, y, np.concatenate(xs_parts),
-                    np.concatenate(ys_parts), np.concatenate(ext_parts))))
+                rows.append(i)
+                aggs.append(agg_fn(
+                    int(zs[i]), int(xs[i]), int(ys[i]),
+                    np.concatenate([lc.px for lc in lcs]),
+                    np.concatenate([lc.py for lc in lcs]),
+                    np.concatenate([np.full(len(lc.ids), lc.extent, np.float64)
+                                    for lc in lcs])))
             if rows:
-                yield pd.DataFrame(
-                    rows, columns=["z", "x", "y"] +
-                    [c.strip().split()[0] for c in agg_schema.split(",")])
+                cols = dict(zip(schema.names[3:], map(list, zip(*aggs))))
+                cols["z"], cols["x"], cols["y"] = zs[rows], xs[rows], ys[rows]
+                yield _record_batch(schema, cols)
 
-    return tiles.mapInPandas(run, f"z int, x bigint, y bigint, {agg_schema}")
+    return tiles.mapInArrow(run, ddl)
 
 
 def encode_geobuf_tiles(entities: DataFrame,
@@ -692,20 +571,21 @@ def transcode_geobuf_tiles(gb_tiles: DataFrame,
     """Per-tile geobuf stream -> serialized MVT layer (WriteLayerGeobuf,
     write_layer.go:218-267). Embarrassingly parallel per tile row; output is
     byte-identical to the direct encode path of the quantized features."""
-    from ..codec.geobuf import transcode_geobuf_layer
+    schema = _arrow_schema(TILE_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for z, x, y, blob, nf in zip(pdf["z"], pdf["x"], pdf["y"],
-                                         pdf["geobuf"], pdf["n_features"]):
-                buf = transcode_geobuf_layer(bytes(blob), int(z), int(x),
-                                             int(y), layer_name)
-                rows.append((int(z), int(x), int(y), layer_name, buf, int(nf)))
-            yield pd.DataFrame(rows, columns=["z", "x", "y", "layer",
-                                              "tile_pbf", "n_features"])
+    def run(batches):
+        from ..codec.geobuf import transcode_geobuf_layer
+        for rb in batches:
+            z, x, y = _tile_keys(rb)
+            bufs = [transcode_geobuf_layer(blob, int(a), int(b), int(c),
+                                           layer_name)
+                    for a, b, c, blob in zip(z, x, y,
+                                             rb.column("geobuf").to_pylist())]
+            yield _record_batch(schema, {
+                "z": z, "x": x, "y": y, "layer": [layer_name] * len(bufs),
+                "tile_pbf": bufs, "n_features": rb.column("n_features")})
 
-    return gb_tiles.mapInPandas(run, TILE_SCHEMA)
+    return gb_tiles.mapInArrow(run, TILE_SCHEMA)
 
 
 def _object_array(values) -> np.ndarray:
@@ -901,92 +781,72 @@ def decode_tile_vertices(tiles: DataFrame, scale_dim: float | None = None) -> Da
     With ``scale_dim`` also emits coords scaled by 1/dim with
     round-half-away-from-zero — ConvertGeometry / LoadGeometryScaled
     (read_feature_lazy.go:342-396, ``pbf.Round(x/dim, .5, 0)``)."""
-    from ..codec.decode import decode_tile
+    ddl = ("z int, x bigint, y bigint, layer string, feature_id bigint, "
+           "geojson_type string, ring_idx int, pt_idx int, "
+           "ix bigint, iy bigint")
+    if scale_dim is not None:
+        ddl += ", sx bigint, sy bigint"
+    schema = _arrow_schema(ddl)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        from ..codec.decode import decode_tile
+        for rb in batches:
             # Per-FEATURE scalar metadata + per-feature vertex arrays; the
             # per-vertex expansion happens once at the end with np.repeat —
             # no per-vertex Python (the bulk treatment the point decoder got,
             # see VERDICT r2 next-round #1).
-            meta_z, meta_x, meta_y = [], [], []
-            meta_layer, meta_fid, meta_gt = [], [], []
+            rows, meta_layer, meta_fid, meta_gt = [], [], [], []
             counts = []            # vertices per feature
             rings_per_feat = []    # rings per feature
             all_ring_lens = []     # flat: vertices per ring, across features
             xs_parts, ys_parts = [], []
-            for z, x, y, buf in zip(pdf["z"], pdf["x"], pdf["y"],
-                                    pdf["tile_pbf"]):
+            for i, buf in enumerate(rb.column("tile_pbf").to_pylist()):
                 if buf is None:
                     continue
-                for lname, f in decode_tile(bytes(buf), int(z), int(x),
-                                            int(y), mode="int"):
+                for lname, f in decode_tile(buf, mode="int"):
                     n = sum(f.ring_lens)
                     if n == 0:
                         continue
-                    meta_z.append(int(z)); meta_x.append(int(x))
-                    meta_y.append(int(y)); meta_layer.append(lname)
-                    meta_fid.append(f.feature_id)
+                    rows.append(i)
+                    meta_layer.append(lname)
+                    meta_fid.append(f.feature_id or 0)
                     meta_gt.append(f.geojson_type)
                     counts.append(n)
                     rings_per_feat.append(len(f.ring_lens))
                     all_ring_lens.extend(f.ring_lens)
                     xs_parts.append(f.xs)
                     ys_parts.append(f.ys)
-            if counts:
-                cnt = np.asarray(counts, dtype=np.int64)
-                # ring_idx / pt_idx computed ONCE at batch level:
-                # ring index within its feature, repeated per vertex …
-                lens = np.asarray(all_ring_lens, dtype=np.int64)
-                rpf = np.asarray(rings_per_feat, dtype=np.int64)
-                ring_off = np.repeat(np.cumsum(rpf) - rpf, rpf)
-                ring_in_feat = np.arange(len(lens), dtype=np.int64) - ring_off
-                ring_idx = np.repeat(ring_in_feat.astype(np.int32), lens)
-                # … and vertex index within its ring.
-                vert_off = np.repeat(np.cumsum(lens) - lens, lens)
-                pt_idx = (np.arange(int(lens.sum()), dtype=np.int64)
-                          - vert_off).astype(np.int32)
-                out = pd.DataFrame({
-                    "z": np.repeat(np.asarray(meta_z, np.int32), cnt),
-                    "x": np.repeat(np.asarray(meta_x, np.int64), cnt),
-                    "y": np.repeat(np.asarray(meta_y, np.int64), cnt),
-                    "layer": np.repeat(np.asarray(meta_layer, object), cnt),
-                    # feature_id may be None (id field absent in the wire);
-                    # object-repeat + nullable Int64 keeps bigint-with-null.
-                    "feature_id": pd.array(
-                        np.repeat(np.asarray(meta_fid, object), cnt),
-                        dtype="Int64"),
-                    "geojson_type": np.repeat(np.asarray(meta_gt, object), cnt),
-                    "ring_idx": ring_idx,
-                    "pt_idx": pt_idx,
-                    "ix": np.concatenate(xs_parts).astype(np.int64),
-                    "iy": np.concatenate(ys_parts).astype(np.int64),
-                })
-            else:
-                out = pd.DataFrame({
-                    "z": np.array([], np.int32), "x": np.array([], np.int64),
-                    "y": np.array([], np.int64),
-                    "layer": np.array([], object),
-                    "feature_id": np.array([], np.int64),
-                    "geojson_type": np.array([], object),
-                    "ring_idx": np.array([], np.int32),
-                    "pt_idx": np.array([], np.int32),
-                    "ix": np.array([], np.int64),
-                    "iy": np.array([], np.int64),
-                })
+            if not counts:
+                continue
+            cnt = np.asarray(counts, dtype=np.int64)
+            # ring_idx / pt_idx computed ONCE at batch level:
+            # ring index within its feature, repeated per vertex …
+            lens = np.asarray(all_ring_lens, dtype=np.int64)
+            rpf = np.asarray(rings_per_feat, dtype=np.int64)
+            ring_off = np.repeat(np.cumsum(rpf) - rpf, rpf)
+            ring_in_feat = np.arange(len(lens), dtype=np.int64) - ring_off
+            # … and vertex index within its ring.
+            vert_off = np.repeat(np.cumsum(lens) - lens, lens)
+            z, x, y = _tile_keys(rb, np.repeat(rows, cnt))
+            cols = {
+                "z": z, "x": x, "y": y,
+                "layer": np.repeat(np.asarray(meta_layer, object), cnt),
+                "feature_id": _feature_ids(
+                    np.repeat(np.asarray(meta_fid, np.uint64), cnt)),
+                "geojson_type": np.repeat(np.asarray(meta_gt, object), cnt),
+                "ring_idx": np.repeat(ring_in_feat, lens),
+                "pt_idx": np.arange(int(lens.sum()), dtype=np.int64) - vert_off,
+                "ix": np.concatenate(xs_parts).astype(np.int64),
+                "iy": np.concatenate(ys_parts).astype(np.int64),
+            }
             if scale_dim is not None:
                 for src, dst in (("ix", "sx"), ("iy", "sy")):
-                    v = out[src].to_numpy(np.float64) / float(scale_dim)
-                    out[dst] = (np.sign(v) *
-                                np.floor(np.abs(v) + 0.5)).astype(np.int64)
-            yield out
+                    v = cols[src] / float(scale_dim)
+                    cols[dst] = (np.sign(v) *
+                                 np.floor(np.abs(v) + 0.5)).astype(np.int64)
+            yield _record_batch(schema, cols)
 
-    schema = ("z int, x bigint, y bigint, layer string, feature_id bigint, "
-              "geojson_type string, ring_idx int, pt_idx int, "
-              "ix bigint, iy bigint")
-    if scale_dim is not None:
-        schema += ", sx bigint, sy bigint"
-    return tiles.mapInPandas(run, schema)
+    return tiles.mapInArrow(run, ddl)
 
 
 def decode_tile_props_typed(tiles: DataFrame,
@@ -999,54 +859,50 @@ def decode_tile_props_typed(tiles: DataFrame,
     "frac": "double", "flag": "boolean", "name": "string"}. Adds a
     ``ptypes`` column with the decoded python type names (sorted by prop)
     so tests/oracles can assert type preservation, not just values."""
-    from ..codec.decode import decode_feature, parse_tile
-
     names = sorted(prop_schema)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {"feature_id": [], "ptypes": []}
-            for c in names:
-                cols[c] = []
-            for buf in pdf["tile_pbf"]:
-                if buf is None:
-                    continue
-                for lf in parse_tile(bytes(buf)):
-                    for span in lf.feature_spans:
-                        f = decode_feature(lf, span, mode="props")
-                        if f is None:
-                            continue
-                        cols["feature_id"].append(f.feature_id)
-                        tags = []
-                        for c in names:
-                            v = f.properties.get(c)
-                            cols[c].append(v)
-                            tags.append(type(v).__name__)
-                        cols["ptypes"].append(",".join(tags))
-            yield pd.DataFrame(cols)
-
-    schema = "feature_id bigint, ptypes string, " + ", ".join(
+    ddl = "feature_id bigint, ptypes string, " + ", ".join(
         f"{c} {prop_schema[c]}" for c in names)
-    return tiles.mapInPandas(run, schema)
+    schema = _arrow_schema(ddl)
+
+    def run(batches):
+        for rb in batches:
+            lcs = [lc for _, _, lc in _layer_tables(
+                rb.column("tile_pbf").to_pylist(), "props", None, False)]
+            keys, values, lens = _entries(lcs)
+            n = len(lens)
+            if not n:
+                continue
+            entry_row = np.repeat(np.arange(n), lens)
+            cols = {"feature_id": _feature_ids(
+                np.concatenate([lc.ids for lc in lcs]))}
+            for c in names:
+                hit = keys == c
+                cols[c] = np.full(n, None, object)
+                cols[c][entry_row[hit]] = values[hit]
+            cols["ptypes"] = [",".join(type(cols[c][r]).__name__
+                                       for c in names) for r in range(n)]
+            yield _record_batch(schema, cols)
+
+    return tiles.mapInArrow(run, ddl)
 
 
 def tile_stats(tiles: DataFrame) -> DataFrame:
     """Header-only scan: layer names + feature counts without decoding
     features — the NewTile lazy-catalog path (read_tile.go:20-44)."""
-    from ..codec.decode import parse_tile
+    ddl = ("z int, x bigint, y bigint, layer string, n_features int, "
+           "extent int, version int, n_keys int, n_values int")
+    schema = _arrow_schema(ddl)
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for z, x, y, buf in zip(pdf["z"], pdf["x"], pdf["y"], pdf["tile_pbf"]):
-                for lf in parse_tile(bytes(buf)):
-                    rows.append((int(z), int(x), int(y), lf.name,
-                                 len(lf.feature_spans), lf.extent, lf.version,
-                                 len(lf.keys), len(lf.values)))
-            yield pd.DataFrame(rows, columns=["z", "x", "y", "layer",
-                                              "n_features", "extent", "version",
-                                              "n_keys", "n_values"])
+    def stats(batches):
+        from ..codec.decode import parse_tile
+        for rb in batches:
+            recs = [(i, lf.name, len(lf.feature_spans), lf.extent,
+                     lf.version, len(lf.keys), len(lf.values))
+                    for i, buf in enumerate(rb.column("tile_pbf").to_pylist())
+                    if buf is not None for lf in parse_tile(buf)]
+            if recs:
+                rows, *vals = zip(*recs)
+                yield _record_batch(schema, dict(zip(
+                    schema.names, (*_tile_keys(rb, rows), *vals))))
 
-    return tiles.mapInPandas(
-        stats, "z int, x bigint, y bigint, layer string, n_features int, "
-               "extent int, version int, n_keys int, n_values int")
+    return tiles.mapInArrow(stats, ddl)
