@@ -1,5 +1,7 @@
-"""The bulk point-layer encoder must be byte-identical to the canonical
-per-feature encoder (encode.encode_layer with sorted keys, string values)."""
+"""The one bulk encoder (encode_geom_tiles_bulk, and the point adapter
+encode_point_tiles_bulk on top of it) must be byte-identical to the
+canonical per-feature encoder (encode.encode_layer with sorted keys and
+id 0 passed as absent)."""
 
 import numpy as np
 import pytest
@@ -19,6 +21,9 @@ def test_bulk_matches_canonical(seed):
         ty = int(rng.integers(0, 1 << z))
         w, s, e, n = tm.tile_bounds(z, tx, ty)
         k = int(rng.integers(1, 8))
+        if t == 0:  # top-left corner (bare MoveTo header), and clamped
+            for lng, lat in ((w, n), (e + (e - w) / 20, s - (n - s) / 20)):
+                rows.append((tx, ty, float(lng), float(lat), 0, "u0", "0"))
         for i in range(k):
             lng = w + (e - w) * rng.random()
             lat = s + (n - s) * rng.random()
@@ -98,8 +103,9 @@ def test_bulk_noncontiguous_slices_and_array_z():
 
 def _bulk_vs_scalar(geom_type, rows_by_tile, props_by_tile, ids_by_tile,
                     extent_clamp=False):
-    """Encode the same features via encode_layer (scalar Cursor path) and
-    encode_geom_tiles_bulk; return (scalar bytes list, bulk bytes list)."""
+    """Encode the same features via encode_layer (scalar Cursor path, id 0
+    passed as absent) and encode_geom_tiles_bulk; return (scalar bytes
+    list, bulk bytes list). A Point row is one [lng, lat] pair."""
     import numpy as np
 
     from vector_tile_go_spark.codec.encode import encode_layer
@@ -109,7 +115,7 @@ def _bulk_vs_scalar(geom_type, rows_by_tile, props_by_tile, ids_by_tile,
     scalar = []
     for t in tiles:
         feats = [{"type": geom_type, "coordinates": c, "properties": pr,
-                  "id": fid}
+                  "id": fid or None}
                  for c, pr, fid in zip(rows_by_tile[t], props_by_tile[t],
                                        ids_by_tile[t])]
         scalar.append(encode_layer(feats, t[0], t[1], t[2], "g",
@@ -128,8 +134,9 @@ def _bulk_vs_scalar(geom_type, rows_by_tile, props_by_tile, ids_by_tile,
     keys = sorted(all_props[0]) if all_props else []
     prop_cols = {k: np.array([p[k] for p in all_props], dtype=object)
                  for k in keys}
-    verts, ring_lens, ring_feat, firsts = flatten_geom_rows(geom_type,
-                                                            all_rows)
+    verts, ring_lens, ring_feat, firsts = (
+        flatten_geom_rows("MultiPoint", [[c] for c in all_rows])
+        if geom_type == "Point" else flatten_geom_rows(geom_type, all_rows))
     bulk, nf = encode_geom_tiles_bulk(
         np.array(zs), np.array(xs), np.array(ys), np.array(all_ids),
         prop_cols, starts, ends, "g", geom_type, verts, ring_lens,
@@ -138,9 +145,10 @@ def _bulk_vs_scalar(geom_type, rows_by_tile, props_by_tile, ids_by_tile,
 
 
 def test_geom_bulk_byte_identity():
-    """encode_geom_tiles_bulk == encode_layer byte-for-byte across line/
-    polygon shapes: winding reversal, unclosed rings, holes, zero-delta
-    drops, degenerate truncation/abort, shared dictionaries, multi-tile."""
+    """encode_geom_tiles_bulk == encode_layer byte-for-byte across every
+    geometry type: winding reversal, unclosed rings, holes, zero-delta
+    drops, degenerate truncation/abort, shared dictionaries, multi-tile,
+    a point on the tile's top-left corner, and id 0 written as absent."""
     import vector_tile_go_spark.tilemath as tm
     z, x, y = 7, 41, 53
     w, s, e, n = tm.tile_bounds(z, x, y)
@@ -153,6 +161,8 @@ def test_geom_bulk_byte_identity():
     hole = [pt(.25, .2), pt(.35, .2), pt(.3, .3)]
     eps = 1e-9                                            # sub-quantum
     cases = {
+        "Point": [pt(.1, .1), pt(0, 1), pt(.5, .5)],      # (0, 1): corner
+        "MultiPoint": [[pt(.1, .1), pt(.1, .1), pt(.6, .2)], [pt(0, 1)]],
         "LineString": [
             [pt(.1, .1), pt(.2, .2), pt(.2 + eps, .2 + eps), pt(.4, .1)],
             [pt(.6, .6), pt(.6 + eps, .6)],               # aborted
@@ -170,13 +180,16 @@ def test_geom_bulk_byte_identity():
         ],
     }
     for gt, rows in cases.items():
-        rows_by_tile = {(z, x, y): rows, (z, x + 1, y): rows[:1]}
+        rows_by_tile = {(z, x, y): rows, (z, x + 1, y): rows[:1],
+                        (z, x + 2, y): rows[:1] * 2}
         props = {(z, x, y): [{"nk": str(i % 2), "m": "x"}
                              for i in range(len(rows))],
-                 (z, x + 1, y): [{"nk": "9", "m": "x"}]}
+                 (z, x + 1, y): [{"nk": "9", "m": "x"}],
+                 (z, x + 2, y): [{"nk": "9", "m": "x"}] * 2}
         ids = {(z, x, y): list(range(1, len(rows) + 1)),
-               (z, x + 1, y): [7]}
+               (z, x + 1, y): [7], (z, x + 2, y): [0, 5]}
         scalar, bulk = _bulk_vs_scalar(gt, rows_by_tile, props, ids)
+        assert len(bulk) == 3
         for i, (sb, bb) in enumerate(zip(scalar, bulk)):
             assert sb == bb, f"{gt} tile {i}: bulk diverges from scalar"
 

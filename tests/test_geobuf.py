@@ -98,3 +98,19 @@ def test_value_variant_preserved_through_transcode():
     assert got["s"] == "str" and got["f64"] == 2.5
     assert abs(float(got["f32"]) - 1.25) < 1e-6
     assert got["i"] == -3 and got["u"] == 9 and got["b"] is False
+
+
+def test_transcode_tiles_skips_null_row(spark):
+    """A null geobuf row is skipped, as every decoder skips a null tile;
+    the other rows are transcoded unchanged."""
+    from vector_tile_go_spark.sparkops.udfs import transcode_geobuf_tiles
+    blobs = [gb.frame_stream([gb.encode_geobuf_feature(
+        "Point", [1.0 + i, 2.0], {"k": str(i)}, i + 1)]) for i in range(2)]
+    df = spark.createDataFrame(
+        [(0, 0, 0, blobs[0], 1), (0, 1, 0, None, 3), (0, 2, 0, blobs[1], 1)],
+        "z int, x bigint, y bigint, geobuf binary, n_features int")
+    got = {r["x"]: (bytes(r["tile_pbf"]), r["n_features"])
+           for r in transcode_geobuf_tiles(df, "l").collect()}
+    assert got == {
+        0: (gb.transcode_geobuf_layer(blobs[0], 0, 0, 0, "l"), 1),
+        2: (gb.transcode_geobuf_layer(blobs[1], 0, 2, 0, "l"), 1)}

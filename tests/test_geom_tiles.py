@@ -212,7 +212,7 @@ def test_nonuniform_tile_falls_back_alone(monkeypatch):
     different prop-key sets. Only that tile goes through the scalar
     encode_layer (exactly one call); the other four, three key sets among
     them (one a null map), ride the bulk kernel. Every tile equals
-    encode_layer."""
+    encode_layer; a feature id 0 is absent on both paths."""
     import pyarrow as pa
 
     import vector_tile_go_spark.tilemath as tm
@@ -231,7 +231,7 @@ def test_nonuniform_tile_falls_back_alone(monkeypatch):
             tri = [[w + (.1 + .1 * i) * (e - w), s + .1 * (n - s)],
                    [w + .6 * (e - w), s + .2 * (n - s)],
                    [w + .3 * (e - w), s + .8 * (n - s)]]
-            rows.append((x, i + 1, [tri], p))
+            rows.append((x, i + (x not in (10, 11)), [tri], p))  # ids 0 too
     rb = pa.RecordBatch.from_arrays([
         pa.array([z] * len(rows), pa.int32()),
         pa.array([r[0] for r in rows], pa.int64()),
@@ -256,5 +256,5 @@ def test_nonuniform_tile_falls_back_alone(monkeypatch):
     assert out["n_features"] == [2, 2, 2, 1, 1]
     for x, buf in zip(out["x"], out["tile_pbf"]):
         feats = [{"type": "Polygon", "coordinates": r[2], "properties": r[3],
-                  "id": r[1]} for r in rows if r[0] == x]
+                  "id": r[1] or None} for r in rows if r[0] == x]
         assert buf == encode_layer(feats, z, x, y, "g", extent_clamp=False)

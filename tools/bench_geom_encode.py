@@ -10,7 +10,10 @@ byte-identity, and prints per-feature/per-vertex costs. A second case
 encodes LineStrings with JSON-typed props (str/int/float/bool/null)
 through encode_geojson_tiles' batch body (Arrow column in, json.loads per
 row, typed bulk dictionary) against encode_layer over json.loads of the
-same rows, again asserting byte-identity. Standalone kernel
+same rows, again asserting byte-identity. A third case encodes Points
+with string props (the encode_point_tiles kernel input) through an
+encode_layer loop and through encode_point_tiles_bulk, asserting
+byte-identity and printing us/feature. Standalone kernel
 benches on this host need the malloc thresholds pinned (see CLAUDE.md);
 this script sets them for its own numpy allocations where it can, but for
 faithful numbers run:
@@ -30,7 +33,7 @@ sys.path.insert(0, ".")
 import vector_tile_go_spark.tilemath as tm  # noqa: E402
 from vector_tile_go_spark.codec.encode import encode_layer  # noqa: E402
 from vector_tile_go_spark.codec.encode_fast import (  # noqa: E402
-    encode_geom_tiles_bulk, flatten_geom_rows)
+    encode_geom_tiles_bulk, encode_point_tiles_bulk, flatten_geom_rows)
 from vector_tile_go_spark.sparkops import udfs  # noqa: E402
 
 
@@ -82,6 +85,47 @@ def json_lines_case(ntiles, fpt, vpr, rng):
     print(f"json lines: features={nfeat} verts={nfeat * vpr}")
     print(f"scalar: {t_scalar:.3f}s ({1e6 * t_scalar / nfeat:.1f} us/feat)")
     print(f"bulk:   {t_bulk:.3f}s ({1e6 * t_bulk / nfeat:.1f} us/feat)")
+    print(f"speedup: {t_scalar / t_bulk:.1f}x (warm)")
+
+
+def points_case(ntiles, fpt, rng):
+    """Points with string props: an encode_layer loop per tile vs
+    encode_point_tiles_bulk over the same sorted rows."""
+    z = 9
+    xs, ys, lng, lat, starts, ends = [], [], [], [], [], []
+    for _ in range(ntiles):
+        tx, ty = int(rng.integers(0, 512)), int(rng.integers(100, 400))
+        w, s, e, n = map(float, tm.tile_bounds(z, tx, ty))
+        starts.append(len(xs))
+        xs += [tx] * fpt
+        ys += [ty] * fpt
+        lng += (w + rng.random(fpt) * (e - w)).tolist()
+        lat += (s + rng.random(fpt) * (n - s)).tolist()
+        ends.append(len(xs))
+    nfeat = len(xs)
+    ids = np.arange(1, nfeat + 1)
+    props = {"url": np.array([f"https://s{i % 97}.example.org/"
+                              for i in range(nfeat)], dtype=object),
+             "mention_idx": np.array([str(i % 3) for i in range(nfeat)],
+                                     dtype=object)}
+    t0 = time.perf_counter()
+    scalar = [encode_layer(
+        [{"type": "Point", "coordinates": [lng[i], lat[i]], "id": int(ids[i]),
+          "properties": {k: props[k][i] for k in sorted(props)}}
+         for i in range(starts[t], ends[t])],
+        z, xs[starts[t]], ys[starts[t]], "geo") for t in range(ntiles)]
+    t_scalar = time.perf_counter() - t0
+    t_bulk = None
+    for _ in range(2):  # warm pass, as for the polygons
+        t0 = time.perf_counter()
+        bulk = encode_point_tiles_bulk(
+            z, np.array(xs), np.array(ys), np.array(lng), np.array(lat), ids,
+            props, starts, ends, "geo")
+        t_bulk = time.perf_counter() - t0
+    assert bulk == scalar, "point bulk diverges from scalar"
+    print(f"points: features={nfeat}")
+    print(f"scalar: {t_scalar:.3f}s ({1e6 * t_scalar / nfeat:.1f} us/feat)")
+    print(f"bulk:   {t_bulk:.3f}s ({1e6 * t_bulk / nfeat:.2f} us/feat)")
     print(f"speedup: {t_scalar / t_bulk:.1f}x (warm)")
 
 
@@ -144,6 +188,7 @@ def main():
           f"{1e6 * t_bulk / nverts:.2f} us/vert)")
     print(f"speedup: {t_scalar / t_bulk:.1f}x (warm)")
     json_lines_case(ntiles, fpt, 8, rng)
+    points_case(ntiles, fpt, rng)
 
 
 if __name__ == "__main__":

@@ -549,6 +549,27 @@ def _point_rows(Vu: np.ndarray):
     return V, ok
 
 
+def _point_head(frame: bytes) -> bool:
+    """The field tags of one feature frame against the uniform point
+    layout: frame, id, tags, then type 1 and geometry. A layer whose first
+    frame fails this cannot pass _point_rows (a conforming layer's first
+    frame is exactly its row 0), so bulk_point_layer rejects it here, a
+    few bytes read in Python, before decoding the whole feature region."""
+    try:
+        if frame[0] != 0x12:
+            return False
+        _, pos = read_varint(frame, 1)          # frame length
+        if frame[pos] != 0x08:
+            return False
+        _, pos = read_varint(frame, pos + 1)    # id
+        if frame[pos] != 0x12:
+            return False
+        n, pos = read_varint(frame, pos + 1)    # tags length
+        return frame[pos + n:pos + n + 3] == b"\x18\x01\x22"
+    except IndexError:                          # runs off the frame
+        return False
+
+
 def bulk_point_layer(lf: LayerFrame):
     """Vectorized decode of a UNIFORM point layer: every feature shaped
     [frame, len, 0x08, id, 0x12, tlen, 2P tag ints, 0x18, 1, 0x22, glen,
@@ -566,6 +587,8 @@ def bulk_point_layer(lf: LayerFrame):
     if m == 0 or len(lf.feature_spans) != m:
         return None
     first, last = spans[0][0], spans[-1][1]
+    if not _point_head(lf.buf[first:spans[0][1]]):
+        return None
     for i in range(m - 1):  # frames must be adjacent (contiguous region)
         if spans[i][1] != spans[i + 1][0]:
             return None

@@ -1,15 +1,17 @@
-"""Bulk point-layer encoder: encodes MANY tiles from one sorted batch.
+"""Bulk layer encoder: encodes MANY tiles from one sorted batch, for every
+geometry type, through one kernel (encode_geom_tiles_bulk; Point layers
+reach it through encode_point_tiles_bulk).
 
 Byte-identical to running encode.encode_layer per tile with canonical
-(sorted) property keys and string values — pinned by
+(sorted) property keys and id 0 passed as absent — pinned by
 tests/test_encode_fast.py — but organized for throughput:
 
-- projection is vectorized across the whole batch (per-row tile bounds from
-  the x/y arrays, one numpy pass; replicates Cursor.SinglePoint semantics
+- projection is vectorized across the whole batch (per-vertex tile bounds
+  from the x/y arrays, one numpy pass; replicates Cursor.tile_ints
   including trunc-toward-zero and ExtentBool clamping,
   write_geometry.go:292-323)
-- per-tile work is only dictionary build + byte assembly over plain Python
-  structures (no pandas in the loop)
+- per-tile work is only frame assembly over plain Python bytes (no pandas
+  in the loop)
 
 This is the numpy analog of the reference's allocation-tuned writers
 (write_primitives.go:39-156): bulk length computation, single pass.
@@ -69,11 +71,6 @@ def _varint(x: int) -> bytes:
     if x < (1 << 16):
         return _VARINT_CACHE[x]
     return _varint_raw(x)
-
-
-def _packed(vals) -> bytes:
-    payload = b"".join(_varint(v) for v in vals)
-    return _varint(len(payload)) + payload
 
 
 def _value_str(v: str) -> bytes:
@@ -150,8 +147,7 @@ def _props_dict_bulk(cols, tile_of_row, ntiles: int, nrows: int):
     uniques. ``cols`` are object arrays of property values (any of the
     MVT Value types, values.write_value) in sorted-key order. Returns
     (vi, vilen, pl_u, props_len, counts, enc_uniques, codes_in_order, kp)
-    — shared by the point and line/polygon bulk encoders so the dictionary
-    bytes can never diverge between them."""
+    for encode_geom_tiles_bulk's property scatter and frame assembly."""
     ncols = len(cols)
     mat = np.empty((nrows, ncols), dtype=object)
     for j, c in enumerate(cols):
@@ -196,141 +192,33 @@ def encode_point_tiles_bulk(z: int, x_arr, y_arr, lng, lat, ids,
                             starts, ends, layer_name: str,
                             extent: int = 4096) -> list[bytes]:
     """Encode tiles [starts[i]:ends[i]) of the row arrays -> layer bytes per
-    tile. Rows must be grouped (sorted) so each slice is one tile.
-    prop_cols values must already be numpy object arrays of str.
+    tile. Rows must be grouped (sorted) so each slice is one tile; slices
+    may leave rows out (the streaming carry holds back the last group).
 
-    Fully vectorized (no per-feature Python; the round-4 rewrite of the
-    batch-amortized loop): per-piece varint byte lengths -> cumsum offsets
-    -> masked scatter fills of ONE preallocated feature-stream buffer; the
-    per-tile value dictionaries come from a single pd.factorize plus a
-    per-tile first-appearance ranking. Per-tile Python is only frame
-    assembly (O(tiles), not O(features)) and value-string assembly
-    (O(distinct values)). Byte-identical to encode.encode_layer with
-    canonical sorted keys — pinned by tests/test_encode_fast.py."""
+    A projection of encode_geom_tiles_bulk: the referenced rows are
+    gathered into a packed layout and each becomes a one-vertex Point
+    feature, clamped to the extent like Cursor.SinglePoint
+    (write_geometry.go:292-323). Byte-identical to encode.encode_layer
+    with canonical sorted keys and id 0 as absent — pinned by
+    tests/test_encode_fast.py."""
     starts = np.asarray(starts, dtype=np.int64)
     ends = np.asarray(ends, dtype=np.int64)
     lens = ends - starts
-    ntiles = len(starts)
-
-    x_arr = np.asarray(x_arr)
-    nrows_in = len(x_arr)
-    contiguous = (ntiles == 0 or
-                  (starts[0] == 0 and ends[-1] == nrows_in and
-                   int(lens.sum()) == nrows_in and
-                   bool((starts[1:] == ends[:-1]).all())))
-    keynames = sorted(prop_cols)
-    cols = [np.asarray(prop_cols[k], dtype=object) for k in keynames]
-    ids = np.asarray(ids, dtype=np.int64)
-    if not contiguous:
-        # gather the referenced rows into a packed layout
-        sel = (np.repeat(starts - np.concatenate([[0], np.cumsum(lens)[:-1]]),
-                         lens) + np.arange(int(lens.sum())))
-        x_arr, y_arr = x_arr[sel], np.asarray(y_arr)[sel]
-        lng, lat = np.asarray(lng)[sel], np.asarray(lat)[sel]
-        if np.ndim(z):  # z may be a per-row zoom array, not a scalar
-            z = np.asarray(z)[sel]
-        ids = ids[sel]
-        cols = [c[sel] for c in cols]
-        ends = np.cumsum(lens)
-        starts = ends - lens
-
-    px, py = project_points_bulk(z, x_arr, y_arr, lng, lat, extent)
-    nrows = len(px)
-    zzx = tm.zigzag_encode(px.astype(np.int32)).astype(np.uint64)
-    zzy = tm.zigzag_encode(py.astype(np.int32)).astype(np.uint64)
-    origin = (px == 0) & (py == 0)
-    uid = ids.astype(np.uint64)  # fid & 0xFFFF... wraparound semantics
-    tile_of_row = np.repeat(np.arange(ntiles, dtype=np.int64), lens)
-
-    ncols = len(keynames)
-    name_raw = layer_name.encode("utf-8")
-    name_bytes = b"\x0a" + _varint(len(name_raw)) + name_raw
-    keys_bytes = b"".join(
-        b"\x1a" + _varint(len(k.encode("utf-8"))) + k.encode("utf-8")
-        for k in keynames)
-    tail = b"\x28" + _varint(extent) + b"\x78\x02"
-
-    # --- per-tile value dictionary: shared across columns, indexed in
-    # first-appearance order (feature-major, column-minor) — one global
-    # factorize + a per-tile first-seen rank over the (tile, value) uniques
-    if ncols:
-        (vi, vilen, pl_u, props_len, counts, enc_uniques,
-         codes_in_order, kp) = _props_dict_bulk(cols, tile_of_row, ntiles,
-                                                nrows)
-    else:
-        props_len = np.zeros(nrows, dtype=np.int64)
-
-    # --- per-feature byte lengths -> offsets into one feats buffer
-    idnb = _varlen_u64(uid)
-    has_id = ids != 0
-    id_len = np.where(has_id, 1 + idnb, 0)
-    xynb = _varlen_u64(zzx) + _varlen_u64(zzy)
-    g_len = 1 + xynb  # 0x09 MoveTo(1) + zigzag dx + zigzag dy
-    gnb = _varlen_u64(g_len.astype(np.uint64))
-    geom_len = np.where(origin, 5, 3 + gnb + g_len)
-    parts_len = id_len + props_len + geom_len
-    pnb = _varlen_u64(parts_len.astype(np.uint64))
-    feat_len = 1 + pnb + parts_len
-    feat_off = np.concatenate([[0], np.cumsum(feat_len)[:-1]])
-    total = int(feat_len.sum()) if nrows else 0
-    buf = np.zeros(total, dtype=np.uint8)
-
-    # --- masked scatter fills (feature frame, id, props, geometry)
-    p = feat_off
-    if nrows:
-        buf[p] = 0x12
-    _write_varints(buf, p + 1, parts_len.astype(np.uint64), pnb)
-    p = p + 1 + pnb
-    buf[p[has_id]] = 0x08
-    _write_varints(buf, p[has_id] + 1, uid[has_id], idnb[has_id])
-    p = p + id_len
-    if ncols:
-        if nrows:
-            buf[p] = 0x12
-        plnb = _varlen_u64(pl_u)
-        _write_varints(buf, p + 1, pl_u, plnb)
-        q = p + 1 + plnb
-        for j in range(ncols):
-            for bi, byte in enumerate(kp[j]):
-                buf[q + bi] = byte
-            q = q + len(kp[j])
-            _write_varints(buf, q, vi[:, j], vilen[:, j])
-            q = q + vilen[:, j]
-        p = p + props_len
-    if nrows:
-        buf[p] = 0x18
-        buf[p + 1] = 0x01
-        buf[p + 2] = 0x22
-    po = p[origin]
-    buf[po + 3] = 0x01
-    buf[po + 4] = 0x09
-    no = ~origin
-    q = p[no] + 3
-    _write_varints(buf, q, g_len[no].astype(np.uint64), gnb[no])
-    q = q + gnb[no]
-    buf[q] = 0x09
-    xnb = _varlen_u64(zzx)
-    _write_varints(buf, q + 1, zzx[no], xnb[no])
-    _write_varints(buf, q + 1 + xnb[no], zzy[no], _varlen_u64(zzy)[no])
-
-    # --- per-tile frame assembly (O(tiles) Python; values O(distinct))
-    feats_all = buf.tobytes()
-    byte_end = feat_off + feat_len
-    out = []
-    upos = 0
-    for t in range(ntiles):
-        s, e = starts[t], ends[t]
-        fb = feats_all[feat_off[s]:byte_end[e - 1]] if e > s else b""
-        if ncols:
-            c = int(counts[t])
-            vb = b"".join(map(enc_uniques.__getitem__,
-                              codes_in_order[upos:upos + c]))
-            upos += c
-        else:
-            vb = b""
-        body = name_bytes + fb + keys_bytes + vb + tail
-        out.append(b"\x1a" + _varint(len(body)) + body)
-    return out
+    t_ends = np.cumsum(lens)
+    sel = (np.repeat(starts - (t_ends - lens), lens)
+           + np.arange(int(lens.sum())))
+    if np.ndim(z):  # z may be a per-row zoom array, not a scalar
+        z = np.asarray(z)[sel]
+    n = len(sel)
+    verts = np.column_stack((np.asarray(lng, np.float64)[sel],
+                             np.asarray(lat, np.float64)[sel]))
+    return encode_geom_tiles_bulk(
+        z, np.asarray(x_arr)[sel], np.asarray(y_arr)[sel],
+        np.asarray(ids, np.int64)[sel],
+        {k: np.asarray(c, dtype=object)[sel] for k, c in prop_cols.items()},
+        t_ends - lens, t_ends, layer_name, "Point", verts,
+        np.ones(n, np.int64), np.arange(n), np.ones(n, bool),
+        extent=extent, clamp=True)[0]
 
 
 def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
@@ -338,12 +226,12 @@ def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
                            verts, ring_lens, ring_feat, ring_first_of_poly,
                            extent: int = 4096,
                            clamp: bool = False):
-    """Bulk LineString/Polygon/Multi* layer encoder (VERDICT r4 task #1):
-    the non-point twin of encode_point_tiles_bulk. Byte-identical to
-    encode.encode_layer with canonical sorted keys — same cursor/delta/
-    winding semantics as the scalar builders (write_geometry.go:108-289),
-    pinned by tests/test_encode_fast.py — but with NO per-feature or
-    per-vertex Python:
+    """The one bulk layer encoder, for every geometry type (Point layers
+    reach it through encode_point_tiles_bulk). Byte-identical to
+    encode.encode_layer with canonical sorted keys and id 0 passed as
+    absent — same cursor/delta/winding semantics as the scalar builders
+    (write_geometry.go:108-331), pinned by tests/test_encode_fast.py — but
+    with NO per-feature or per-vertex Python:
 
     - ring closure (TrimPolygonFloat, :26-35) as one gather expansion
     - projection of every vertex in one pass (per-feature tile params)
@@ -352,8 +240,9 @@ def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
       carries across rings and resets per feature, so deltas are purely
       positional), zero-delta LineTo drops as a keep mask, run counts
       back-patched via bincount
-    - command values scattered into one stream, then the same masked
-      varint scatter + frame assembly as the point kernel
+    - command values scattered into one stream, then one masked varint
+      scatter per field into a single feature buffer; per-tile Python is
+      only frame assembly (O(tiles), not O(features))
     - property dictionaries via the shared _props_dict_bulk (aborted
       features still intern their values, like the scalar add_feature)
 
@@ -362,7 +251,9 @@ def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
     slices per tile) and flattened geometry:
     ``verts`` (N, 2) float64, ``ring_lens`` (R,), ``ring_feat`` (R,)
     nondecreasing, ``ring_first_of_poly`` (R,) bool (exterior-ring flag;
-    ignored for lines). LineString features whose single run collapses are
+    ignored for lines). The id field is written only for a nonzero id
+    (MVT feature id 0 = absent); a negative id wraps to its uint64 bits,
+    as in add_feature. LineString features whose single run collapses are
     aborted exactly like add_feature (write_feature.go:57-59); degenerate
     MultiLineString parts are truncated in place (write_geometry.go:160);
     MultiPoint emits one MoveTo header with the original point count and
@@ -505,23 +396,24 @@ def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
         vals[pos] = zzx[k_idx]
         vals[pos + 1] = zzy[k_idx]
 
-    feat_nvals = np.zeros(nfeat, np.int64)
-    np.add.at(feat_nvals, ring_feat, ring_nvals)
+    feat_nvals = np.bincount(ring_feat, weights=ring_nvals,
+                             minlength=nfeat).astype(np.int64)
     vlen = _varlen_u64(vals)
     vlen_cum = np.concatenate([[0], np.cumsum(vlen)])
     feat_v_offs = np.concatenate([[0], np.cumsum(feat_nvals)])
     glen = vlen_cum[feat_v_offs[1:]] - vlen_cum[feat_v_offs[:-1]]
 
-    # --- feature framing (id always written — add_feature semantics for
-    # the geojson path; aborted features get zero-length frames but still
-    # contribute to the dictionaries, like the scalar add_feature)
+    # --- feature framing (id only when nonzero; aborted features get
+    # zero-length frames but still contribute to the dictionaries, like
+    # the scalar add_feature)
     keynames = sorted(prop_cols)
     cols = [np.asarray(prop_cols[k], dtype=object) for k in keynames]
     ncols = len(keynames)
     tile_of_feat = np.repeat(np.arange(ntiles), ends - starts)
     uid = ids.astype(np.uint64)
     idnb = _varlen_u64(uid)
-    id_len = 1 + idnb
+    has_id = ids != 0
+    id_len = np.where(has_id, 1 + idnb, 0)
     if ncols:
         (vi, vilen, pl_u, props_len, counts, enc_uniques,
          codes_in_order, kp) = _props_dict_bulk(cols, tile_of_feat,
@@ -532,21 +424,19 @@ def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
     parts_len = id_len + props_len + 2 + (1 + gnb + glen)
     pnb = _varlen_u64(parts_len.astype(np.uint64))
     feat_len = np.where(live, 1 + pnb + parts_len, 0)
-    feat_off = np.concatenate([[0], np.cumsum(feat_len)[:-1]])
-    buf = np.zeros(int(feat_len.sum()), dtype=np.uint8)
+    byte_cut = np.concatenate([[0], np.cumsum(feat_len)]).astype(np.int64)
+    buf = np.zeros(int(byte_cut[-1]), dtype=np.uint8)
 
-    p = feat_off[live]
-    if len(p):
-        buf[p] = 0x12
+    p = byte_cut[:-1][live]
+    buf[p] = 0x12
     _write_varints(buf, p + 1, parts_len[live].astype(np.uint64), pnb[live])
     p = p + 1 + pnb[live]
-    if len(p):
-        buf[p] = 0x08
-    _write_varints(buf, p + 1, uid[live], idnb[live])
+    wid = has_id[live]
+    buf[p[wid]] = 0x08
+    _write_varints(buf, p[wid] + 1, uid[live][wid], idnb[live][wid])
     p = p + id_len[live]
     if ncols:
-        if len(p):
-            buf[p] = 0x12
+        buf[p] = 0x12
         plnb = _varlen_u64(pl_u)
         _write_varints(buf, p + 1, pl_u[live], plnb[live])
         q = p + 1 + plnb[live]
@@ -557,10 +447,9 @@ def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
             _write_varints(buf, q, vi[live, j], vilen[live, j])
             q = q + vilen[live, j]
         p = p + props_len[live]
-    if len(p):
-        buf[p] = 0x18
-        buf[p + 1] = geom_int
-        buf[p + 2] = 0x22
+    buf[p] = 0x18
+    buf[p + 1] = geom_int
+    buf[p + 2] = 0x22
     _write_varints(buf, p + 3, glen[live].astype(np.uint64), gnb[live])
     gposf = np.zeros(nfeat, np.int64)
     gposf[live] = p + 3 + gnb[live]
@@ -578,22 +467,18 @@ def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
         for k in keynames)
     tail = b"\x28" + _varint(extent) + b"\x78\x02"
     feats_all = buf.tobytes()
-    byte_end = feat_off + feat_len
-    out, nf_out, upos = [], np.zeros(ntiles, np.int64), 0
-    for t in range(ntiles):
-        s, e = starts[t], ends[t]
-        fb = feats_all[feat_off[s]:byte_end[e - 1]] if e > s else b""
-        if ncols:
-            c = int(counts[t])
-            vb = b"".join(map(enc_uniques.__getitem__,
-                              codes_in_order[upos:upos + c]))
-            upos += c
-        else:
-            vb = b""
-        body = name_bytes + fb + keys_bytes + vb + tail
+    tile_lo, tile_hi = byte_cut[starts].tolist(), byte_cut[ends].tolist()
+    if ncols:
+        ucut = np.concatenate([[0], np.cumsum(counts)]).tolist()
+        vbs = [b"".join(map(enc_uniques.__getitem__, codes_in_order[a:b]))
+               for a, b in zip(ucut[:-1], ucut[1:])]
+    else:
+        vbs = [b""] * ntiles
+    out = []
+    for lo, hi, vb in zip(tile_lo, tile_hi, vbs):
+        body = name_bytes + feats_all[lo:hi] + keys_bytes + vb + tail
         out.append(b"\x1a" + _varint(len(body)) + body)
-        nf_out[t] = int(live[s:e].sum())
-    return out, nf_out
+    return out, np.bincount(tile_of_feat[live], minlength=ntiles)
 
 
 def flatten_geom_rows(geom_type: str, rows):

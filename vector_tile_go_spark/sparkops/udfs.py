@@ -3,13 +3,14 @@
 The one unavoidable Python boundary in the engine is the MVT byte codec —
 everything before (extraction, tile assignment) and after (aggregation,
 joins) stays JVM-side. Every UDF is Arrow-batched; no per-row Python
-anywhere. The encoders all take the same plan: one repartition on the
-tile key, a sortWithinPartitions, then ``mapInArrow`` over one sorted-batch
-carry protocol (``_sorted_tile_groups``) feeding a vectorized kernel, so
-no pandas frame is built on either side of the encode boundary. The
-decoders are ``mapInArrow`` too: each decodes its tiles' layers through
-the one layer decode (``codec.decode.decode_layer_columns``) or its own
-kernel, and builds its output RecordBatch from the columns.
+anywhere. The encoders all take the same plan (``_encode_plan``): one
+repartition on the tile key, a sortWithinPartitions, then ``mapInArrow``
+over one sorted-batch carry protocol (``_sorted_tile_groups``) feeding a
+vectorized kernel, so no pandas frame is built on either side of the
+encode boundary. The decoders are ``mapInArrow`` too: each decodes its
+tiles' layers through the one layer decode
+(``codec.decode.decode_layer_columns``) or its own kernel, and builds its
+output RecordBatch from the columns.
 
 Scale notes (the 100 TB story):
 - encode shuffles once on (z, x, y) — the same explicit boundary the
@@ -78,6 +79,24 @@ def _sorted_tile_groups(batches, emit):
         yield emit(pending, np.array([0]), np.array([pending.num_rows]))
 
 
+def _encode_plan(df: DataFrame, n_partitions: int | None, key: tuple,
+                 order: tuple, emit, ddl: str) -> DataFrame:
+    """The one plan of every encoder: repartition ``df`` on the tile
+    ``key`` into ``n_partitions`` (default 2 x defaultParallelism), sort
+    each partition by ``key`` then ``order``, and run ``emit`` over the
+    complete tile groups of every sorted Arrow batch
+    (_sorted_tile_groups) in one mapInArrow with output schema ``ddl``."""
+    if n_partitions is None:
+        n_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
+    df = (df.repartition(n_partitions, *key)
+          .sortWithinPartitions(*key, *order))
+
+    def run(batches):
+        return _sorted_tile_groups(batches, emit)
+
+    return df.mapInArrow(run, ddl)
+
+
 def _group_batch(rb, starts, ends, cols: dict):
     """One output row per tile group: the group's key (z int, x/y bigint),
     ``cols`` (name -> pyarrow array), n_features (the group's row count)
@@ -144,18 +163,11 @@ def encode_point_tiles(entities: DataFrame, layer_name: str = "geo",
     the per-group UDF overhead amortized across whole Arrow batches, and
     no pandas materialization at the boundary (the zero-copy path of
     SURVEY §2.10). Property values are encoded as strings."""
-    cols = ["z", "x", "y", "lng", "lat", id_col, *prop_cols]
-    df = entities.select(*cols)
-    if n_partitions is None:
-        n_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    df = (df.repartition(n_partitions, "z", "x", "y")
-          .sortWithinPartitions("z", "x", "y", id_col, *prop_cols))
-
-    def run(batches):
-        return _sorted_tile_groups(batches, lambda rb, s, e: _point_tiles(
-            rb, s, e, layer_name, prop_cols, extent, id_col))
-
-    return df.mapInArrow(run, TILE_SCHEMA)
+    df = entities.select("z", "x", "y", "lng", "lat", id_col, *prop_cols)
+    return _encode_plan(
+        df, n_partitions, ("z", "x", "y"), (id_col, *prop_cols),
+        lambda rb, s, e: _point_tiles(rb, s, e, layer_name, prop_cols,
+                                      extent, id_col), TILE_SCHEMA)
 
 
 def encode_point_tiles_salted(entities: DataFrame, layer_name: str = "geo",
@@ -168,19 +180,14 @@ def encode_point_tiles_salted(entities: DataFrame, layer_name: str = "geo",
     README.md:142-191); readers that merge same-named layers see one logical
     layer. The final concat is a tiny per-tile agg, so the heavy encode work
     spreads over n_salts times more tasks for hot tiles."""
-    cols = ["z", "x", "y", "lng", "lat", id_col, *prop_cols]
-    df = entities.select(*cols).withColumn(
+    df = entities.select(
+        "z", "x", "y", "lng", "lat", id_col, *prop_cols).withColumn(
         "salt", F.pmod(F.xxhash64(id_col), F.lit(n_salts)).cast("int"))
-    n_parts = df.sparkSession.sparkContext.defaultParallelism * 2
-    df = (df.repartition(n_parts, "z", "x", "y", "salt")
-          .sortWithinPartitions("z", "x", "y", "salt", id_col, *prop_cols))
-
-    def run(batches):
-        return _sorted_tile_groups(batches, lambda rb, s, e: _point_tiles(
-            rb, s, e, layer_name, prop_cols, 4096, id_col))
-
-    partials = df.mapInArrow(
-        run, TILE_SCHEMA + ", salt int").drop("layer")
+    partials = _encode_plan(
+        df, None, ("z", "x", "y", "salt"), (id_col, *prop_cols),
+        lambda rb, s, e: _point_tiles(rb, s, e, layer_name, prop_cols,
+                                      4096, id_col),
+        TILE_SCHEMA + ", salt int").drop("layer")
     # per-tile binary concat of the (few) partials, ordered by salt for
     # determinism; this is the O(1) compositing union — no re-encode.
     # F.aggregate + F.concat stays JVM-side (whole-stage codegen), no
@@ -536,12 +543,6 @@ def encode_geobuf_tiles(entities: DataFrame,
     feature framing itself is a small per-feature kernel inside the Arrow
     batch (compat ingestion codec, not the bulk hot path). Property values
     are rendered as strings (_prop_strings)."""
-    cols = ["z", "x", "y", "lng", "lat", id_col, *prop_cols]
-    df = entities.select(*cols)
-    if n_partitions is None:
-        n_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    df = (df.repartition(n_partitions, "z", "x", "y")
-          .sortWithinPartitions("z", "x", "y", id_col, *prop_cols))
 
     def emit(rb, starts, ends):
         from ..codec.geobuf import encode_geobuf_feature
@@ -561,8 +562,9 @@ def encode_geobuf_tiles(entities: DataFrame,
         return _group_batch(rb, starts, ends,
                             {"geobuf": pa.array(blobs, pa.binary())})
 
-    return df.mapInArrow(
-        lambda batches: _sorted_tile_groups(batches, emit),
+    df = entities.select("z", "x", "y", "lng", "lat", id_col, *prop_cols)
+    return _encode_plan(
+        df, n_partitions, ("z", "x", "y"), (id_col, *prop_cols), emit,
         "z int, x bigint, y bigint, geobuf binary, n_features int")
 
 
@@ -570,20 +572,25 @@ def transcode_geobuf_tiles(gb_tiles: DataFrame,
                            layer_name: str = "geo") -> DataFrame:
     """Per-tile geobuf stream -> serialized MVT layer (WriteLayerGeobuf,
     write_layer.go:218-267). Embarrassingly parallel per tile row; output is
-    byte-identical to the direct encode path of the quantized features."""
+    byte-identical to the direct encode path of the quantized features.
+    A null ``geobuf`` row is skipped, as every decoder skips a null tile."""
     schema = _arrow_schema(TILE_SCHEMA)
 
     def run(batches):
         from ..codec.geobuf import transcode_geobuf_layer
         for rb in batches:
-            z, x, y = _tile_keys(rb)
-            bufs = [transcode_geobuf_layer(blob, int(a), int(b), int(c),
+            blobs = rb.column("geobuf").to_pylist()
+            rows = [i for i, blob in enumerate(blobs) if blob is not None]
+            if not rows:
+                continue
+            z, x, y = _tile_keys(rb, rows)
+            bufs = [transcode_geobuf_layer(blobs[i], int(a), int(b), int(c),
                                            layer_name)
-                    for a, b, c, blob in zip(z, x, y,
-                                             rb.column("geobuf").to_pylist())]
+                    for i, a, b, c in zip(rows, z, x, y)]
             yield _record_batch(schema, {
                 "z": z, "x": x, "y": y, "layer": [layer_name] * len(bufs),
-                "tile_pbf": bufs, "n_features": rb.column("n_features")})
+                "tile_pbf": bufs,
+                "n_features": rb.column("n_features").take(pa.array(rows))})
 
     return gb_tiles.mapInArrow(run, TILE_SCHEMA)
 
@@ -694,7 +701,7 @@ def _geom_tiles(rb, starts, ends, geom_type: str, props_kind: str,
                   "coordinates": _geojson_coords(geom_type, c, four_level),
                   "properties": dict(zip(keys[offs[i]:offs[i + 1]],
                                          vals[offs[i]:offs[i + 1]])),
-                  "id": int(fids[i])}
+                  "id": int(fids[i]) or None}  # id 0 = absent
                  for i, c in zip(range(s, e),
                                  coords.slice(s, e - s).to_pylist())]
         bufs[t] = encode_layer(feats, int(zs[s]), int(xs[s]), int(ys[s]),
@@ -760,17 +767,11 @@ def encode_geojson_tiles(features: DataFrame, geom_type: str,
         raise TypeError("props must be map<string,...> or a JSON string, "
                         f"not {ptype.simpleString()}")
     df = features.select("z", "x", "y", "feature_id", "coords", "props")
-    if n_partitions is None:
-        n_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    df = (df.repartition(n_partitions, "z", "x", "y")
-          .sortWithinPartitions("z", "x", "y", "feature_id"))
-
-    def run(batches):
-        return _sorted_tile_groups(batches, lambda rb, s, e: _geom_tiles(
-            rb, s, e, geom_type, props_kind, layer_name, extent,
-            extent_clamp))
-
-    return df.mapInArrow(run, TILE_SCHEMA)
+    return _encode_plan(
+        df, n_partitions, ("z", "x", "y"), ("feature_id",),
+        lambda rb, s, e: _geom_tiles(rb, s, e, geom_type, props_kind,
+                                     layer_name, extent, extent_clamp),
+        TILE_SCHEMA)
 
 
 
