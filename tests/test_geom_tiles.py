@@ -258,3 +258,24 @@ def test_nonuniform_tile_falls_back_alone(monkeypatch):
         feats = [{"type": "Polygon", "coordinates": r[2], "properties": r[3],
                   "id": r[1] or None} for r in rows if r[0] == x]
         assert buf == encode_layer(feats, z, x, y, "g", extent_clamp=False)
+
+
+def test_persisted_encode_is_coalesced(spark):
+    """A persisted encode of a few tiles is sized by its shuffle bytes:
+    AQE coalesces the un-numbered repartition even on a cached plan, so it
+    holds fewer partitions than spark.sql.shuffle.partitions, and its
+    tiles are byte-identical to a pinned two-partition encode."""
+    rows = [(6, 10 + t, 20, i + 1, [[[0.1 * t, 0.2 * i], [0.3, 0.4 + t]]],
+             {"nk": str(i)}) for t in range(12) for i in range(3)]
+    df = _mk_df(spark, rows)
+    tiles = encode_geojson_tiles(df, "LineString", layer_name="g").persist()
+    try:
+        assert tiles.count() == 12
+        assert tiles.rdd.getNumPartitions() < int(
+            spark.conf.get("spark.sql.shuffle.partitions"))
+        pinned = encode_geojson_tiles(df, "LineString", layer_name="g",
+                                      n_partitions=2)
+        got = sorted(tuple(r) for r in tiles.collect())
+        assert got == sorted(tuple(r) for r in pinned.collect())
+    finally:
+        tiles.unpersist()

@@ -6,6 +6,8 @@
   ArrowEvalPython) — never a row-at-a-time BatchEvalPython.
 - The generic-geometry encoder is one mapInArrow route for every geometry
   type and both props schemas.
+- Every encode shuffle (and rasterize's) is un-numbered, so AQE sizes it
+  by bytes, unless the caller pins ``n_partitions``.
 - Every decoder (decode_tiles in each mode, prop_cols and quarantine
   variant, the fused decoders, vertex, typed-props and header decode, and
   the geobuf transcode) is a mapInArrow, with no MapInPandas.
@@ -106,3 +108,35 @@ def test_decoders_are_map_in_arrow(spark):
         if "MapInArrow" not in plan or "MapInPandas" in plan:
             offenders.append(name)
     assert not offenders, offenders
+
+
+def test_encode_shuffles_sized_by_aqe(spark):
+    """Every encoder's repartition (and rasterize's) is un-numbered, so
+    AQE may coalesce it; an explicit ``n_partitions`` pins a numbered one."""
+    from vector_tile_go_spark.sparkops import udfs
+    from vector_tile_go_spark.spatial.raster import rasterize
+    pts = spark.createDataFrame(
+        [], "z int, x bigint, y bigint, lng double, lat double, "
+            "doc_id bigint, url string, mention_idx int")
+    feats = spark.createDataFrame(
+        [], "z int, x bigint, y bigint, feature_id bigint, "
+            "coords array<array<array<double>>>, props map<string,string>")
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    for name, df in (
+            ("point", udfs.encode_point_tiles(pts)),
+            ("salted", udfs.encode_point_tiles_salted(pts)),
+            ("geobuf", udfs.encode_geobuf_tiles(pts)),
+            ("geojson", udfs.encode_geojson_tiles(feats, "LineString")),
+            ("raster", rasterize(pts))):
+        p = plan(df)
+        assert "REPARTITION_BY_COL" in p and "REPARTITION_BY_NUM" not in p, \
+            (name, p)
+    for name, df in (
+            ("point", udfs.encode_point_tiles(pts, n_partitions=2)),
+            ("geobuf", udfs.encode_geobuf_tiles(pts, n_partitions=2)),
+            ("geojson", udfs.encode_geojson_tiles(feats, "LineString",
+                                                  n_partitions=2))):
+        assert "REPARTITION_BY_NUM" in plan(df), name

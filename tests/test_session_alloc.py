@@ -49,3 +49,12 @@ def test_heap_sized_lean():
     import inspect
     src = inspect.getsource(get_spark)
     assert "cores // 2" in src
+
+
+def test_aqe_sizes_cached_encode_shuffles(spark):
+    # the encode shuffles are coalesced by bytes, on persisted plans too,
+    # down to a floor sized for Python tasks (session.py)
+    assert spark.conf.get(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true"
+    assert spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize") == "64k"

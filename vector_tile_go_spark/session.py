@@ -49,6 +49,24 @@ def get_spark(app_name: str = "vector_tile_go_spark", cores: int | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # every encode shuffle is an un-numbered repartition on the tile
+        # key (udfs._encode_plan), so AQE sizes its Python stage by bytes:
+        # polygon_roundtrip's encode_geojson_tiles 34 -> 12 tasks and its
+        # decode_tiles 16 -> 5 per pass, pass_s 1.30 -> 0.91 s (median of
+        # 20 alternating pairs, 4 CPUs; BASELINE.md "Encode shuffle
+        # sizing"). Two settings make that hold:
+        # - a persisted plan may change its output partitioning; at the
+        #   default (false) AQE leaves a cached encode at all
+        #   shuffle.partitions, and polygon_roundtrip, bench.py and the
+        #   fused-count tests all persist their encode output
+        # - a 64 KB coalesce floor, not the default 1 MB: the default is
+        #   sized for JVM tasks and folds the 10k-polygon layer into ONE
+        #   Python task, so the decode after it runs on 2 of 4 cores; at
+        #   64 KB that layer keeps 4 tasks
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                "64k")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # Spark sets -Xms = -Xmx = driver.memory: size it to the core budget

@@ -307,7 +307,7 @@ def cosine_pairs(embeddings: DataFrame, threshold: float = 0.35,
     # Built JVM-side from spark.range so a B~4000 auto-sizing (~8M pairs)
     # never materializes a Python list through createDataFrame.
     pairs_df = (spark.range(n_blocks * n_blocks)
-                .select((F.col("id") / n_blocks).cast("int").alias("bi"),
+                .select(F.expr(f"id div {n_blocks}").cast("int").alias("bi"),
                         F.pmod("id", F.lit(n_blocks)).cast("int").alias("bj"))
                 .filter(F.col("bi") <= F.col("bj")))
     a_side = (F.broadcast(pairs_df)

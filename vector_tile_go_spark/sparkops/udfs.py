@@ -81,15 +81,19 @@ def _sorted_tile_groups(batches, emit):
 
 def _encode_plan(df: DataFrame, n_partitions: int | None, key: tuple,
                  order: tuple, emit, ddl: str) -> DataFrame:
-    """The one plan of every encoder: repartition ``df`` on the tile
-    ``key`` into ``n_partitions`` (default 2 x defaultParallelism), sort
-    each partition by ``key`` then ``order``, and run ``emit`` over the
-    complete tile groups of every sorted Arrow batch
-    (_sorted_tile_groups) in one mapInArrow with output schema ``ddl``."""
-    if n_partitions is None:
-        n_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    df = (df.repartition(n_partitions, *key)
-          .sortWithinPartitions(*key, *order))
+    """The one plan of every encoder: hash-repartition ``df`` on the tile
+    ``key``, sort each partition by ``key`` then ``order``, and run
+    ``emit`` over the complete tile groups of every sorted Arrow batch
+    (_sorted_tile_groups) in one mapInArrow with output schema ``ddl``.
+
+    With ``n_partitions`` None the exchange is un-numbered
+    (REPARTITION_BY_COL), so AQE coalesces it to the layer's shuffle
+    bytes (session.get_spark sets the floor) and a small layer starts
+    few Python tasks; a numbered one (REPARTITION_BY_NUM) it never
+    coalesces. Not ``rebalance``: AQE may split a skewed rebalance
+    partition, which would put one tile in two rows."""
+    by = key if n_partitions is None else (n_partitions, *key)
+    df = df.repartition(*by).sortWithinPartitions(*key, *order)
 
     def run(batches):
         return _sorted_tile_groups(batches, emit)
@@ -162,7 +166,9 @@ def encode_point_tiles(entities: DataFrame, layer_name: str = "geo",
     the sort). This is the reference's EP3 boundary (SURVEY.md §3) with
     the per-group UDF overhead amortized across whole Arrow batches, and
     no pandas materialization at the boundary (the zero-copy path of
-    SURVEY §2.10). Property values are encoded as strings."""
+    SURVEY §2.10). Property values are encoded as strings. AQE sizes the
+    shuffle from its bytes unless ``n_partitions`` pins it
+    (_encode_plan)."""
     df = entities.select("z", "x", "y", "lng", "lat", id_col, *prop_cols)
     return _encode_plan(
         df, n_partitions, ("z", "x", "y"), (id_col, *prop_cols),

@@ -110,8 +110,7 @@ def rasterize(entities: DataFrame, steps: int = STEPS) -> DataFrame:
                                np.array([0]), np.array([len(pending)]))
 
     df = entities.select("z", "x", "y", "lat", "lng")
-    n_parts = df.sparkSession.sparkContext.defaultParallelism * 2
-    return (df.repartition(n_parts, "z", "x", "y")
+    return (df.repartition("z", "x", "y")
             .sortWithinPartitions("z", "x", "y")
             .mapInPandas(raster_batches,
                          "z int, x bigint, y bigint, raster binary, "
