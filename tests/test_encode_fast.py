@@ -104,8 +104,10 @@ def test_bulk_noncontiguous_slices_and_array_z():
 def _bulk_vs_scalar(geom_type, rows_by_tile, props_by_tile, ids_by_tile,
                     extent_clamp=False):
     """Encode the same features via encode_layer (scalar Cursor path, id 0
-    passed as absent) and encode_geom_tiles_bulk; return (scalar bytes
-    list, bulk bytes list). A Point row is one [lng, lat] pair."""
+    passed as absent) and encode_geom_tiles_bulk, whose properties are
+    flat per-feature entries, so features may carry different key sets;
+    return (scalar bytes list, bulk bytes list). A Point row is one
+    [lng, lat] pair."""
     import numpy as np
 
     from vector_tile_go_spark.codec.encode import encode_layer
@@ -131,15 +133,18 @@ def _bulk_vs_scalar(geom_type, rows_by_tile, props_by_tile, ids_by_tile,
         zs.extend([t[0]] * len(rows_by_tile[t]))
         xs.extend([t[1]] * len(rows_by_tile[t]))
         ys.extend([t[2]] * len(rows_by_tile[t]))
-    keys = sorted(all_props[0]) if all_props else []
-    prop_cols = {k: np.array([p[k] for p in all_props], dtype=object)
-                 for k in keys}
+    # flat entries in each dict's own key order: the kernel sorts them
+    entries = [list((p or {}).items()) for p in all_props]
+    keys = np.array([k for e in entries for k, _ in e], dtype=object)
+    vals = np.empty(len(keys), dtype=object)
+    vals[:] = [v for e in entries for _, v in e]
+    offs = np.cumsum([0] + [len(e) for e in entries])
     verts, ring_lens, ring_feat, firsts = (
         flatten_geom_rows("MultiPoint", [[c] for c in all_rows])
         if geom_type == "Point" else flatten_geom_rows(geom_type, all_rows))
     bulk, nf = encode_geom_tiles_bulk(
         np.array(zs), np.array(xs), np.array(ys), np.array(all_ids),
-        prop_cols, starts, ends, "g", geom_type, verts, ring_lens,
+        (keys, vals, offs), starts, ends, "g", geom_type, verts, ring_lens,
         ring_feat, firsts, clamp=extent_clamp)
     return scalar, bulk
 
@@ -209,12 +214,15 @@ def test_geom_bulk_clamped_and_noprops():
 def test_geom_bulk_fuzz_byte_identity():
     """Randomized byte-identity: random geometries (tiny sub-quantum
     segments, out-of-tile coords, mixed winding, open/closed rings,
-    wraparound ids) must encode identically on the scalar and bulk paths."""
+    wraparound ids) and per-feature random key subsets of {a, b, c}, the
+    empty one included, with typed values (str, int, True/1/1.0, None,
+    0.0/-0.0) must encode identically on the scalar and bulk paths."""
     import numpy as np
 
     import vector_tile_go_spark.tilemath as tm
     rng = np.random.default_rng(42)
     z = 6
+    pool = ["s0", "s1", 3, True, 1, 1.0, None, 0.0, -0.0]
     for trial in range(10):
         gt = ["LineString", "MultiLineString", "Polygon",
               "MultiPolygon", "MultiPoint"][trial % 5]
@@ -256,8 +264,8 @@ def test_geom_bulk_fuzz_byte_identity():
                 rows.append([[ring() for _ in range(int(rng.integers(1, 3)))]
                              for _ in range(int(rng.integers(1, 3)))])
         ids = [int(rng.integers(-2, 2**40)) for _ in rows]
-        props = [{"a": str(int(rng.integers(0, 5))),
-                  "b": f"v{int(rng.integers(0, 3))}"} for _ in rows]
+        props = [{k: pool[int(rng.integers(0, len(pool)))]
+                  for k in "cab" if rng.random() < 0.5} for _ in rows]
         rows_by_tile = {(z, x, y): rows}
         scalar, bulk = _bulk_vs_scalar(
             gt, rows_by_tile, {(z, x, y): props}, {(z, x, y): ids},
@@ -466,3 +474,19 @@ def test_json_props_layers_through_spark(spark, geom_type):
     got = {r["x"]: bytes(r["tile_pbf"]) for r in
            encode_geojson_tiles(df, geom_type, layer_name="g").collect()}
     assert got == want
+
+
+def test_bench_geom_encode_tool_runs():
+    """tools/bench_geom_encode.py keeps running at a tiny size, so its
+    three bulk-vs-scalar byte-identity asserts (polygons, JSON-props
+    lines through the encode UDF's batch body, points) stay live."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run([sys.executable, "tools/bench_geom_encode.py",
+                        "3", "4", "6"], cwd=root, capture_output=True,
+                       text=True, timeout=120)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.count("speedup:") == 3

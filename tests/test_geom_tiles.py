@@ -62,6 +62,29 @@ def test_feature_id_zero_is_absent(spark):
     assert v["feature_id"].isna().all()
 
 
+def test_feature_id_rule_on_every_encoder(spark):
+    """One feature-id rule on every encoder, read back by decode_tiles:
+    -1 goes on the wire as its uint64 bits and comes back as -1, 0 is
+    absent (null), 2**40 is unchanged."""
+    from vector_tile_go_spark.sparkops.udfs import (decode_tiles,
+                                                    encode_point_tiles)
+    ids = [-1, 0, 2**40]
+    points = spark.createDataFrame(pd.DataFrame({
+        "z": [8] * 3, "x": [100] * 3, "y": [97] * 3,
+        "lng": [-38.0, -38.01, -38.02], "lat": [40.0] * 3, "doc_id": ids,
+        "url": ["u"] * 3, "mention_idx": ["0"] * 3}))
+    lines = _mk_df(spark, [(6, 10, 20, i, [[[1.0, 1.0], [2.0, 2.0 + i]]],
+                            {"k": "v"}) for i in range(3)])
+    lines = lines.withColumn(
+        "feature_id", F.element_at(F.array(*map(F.lit, ids)),
+                                   F.col("feature_id").cast("int") + 1))
+    for tiles in (encode_point_tiles(points),
+                  encode_geojson_tiles(lines, "LineString")):
+        got = decode_tiles(tiles, mode="props").toPandas()["feature_id"]
+        assert sorted(got.dropna().astype("int64")) == [-1, 2**40]
+        assert got.isna().sum() == 1
+
+
 def test_multi_features_share_tile_sorted_by_id(spark):
     rows = [(5, 10, 12, 2, [[[1.0, 1.0], [2.0, 2.0]]], {"n": "b"}),
             (5, 10, 12, 1, [[[3.0, 3.0], [4.0, 4.0]]], {"n": "a"})]
@@ -176,8 +199,8 @@ def test_bulk_geom_stream_multi_tile_batches(spark):
 
 
 def test_bulk_geom_stream_nonuniform_props_fallback(spark):
-    """Rows with differing prop-key sets fall back to the scalar encoder
-    INSIDE the bulk stream UDF — output bytes still equal encode_layer."""
+    """Rows with differing prop-key sets share one tile through the bulk
+    stream UDF — output bytes equal encode_layer."""
     from pyspark.sql import functions as F  # noqa: F401
 
     import vector_tile_go_spark.tilemath as tm
@@ -207,57 +230,102 @@ def test_bulk_geom_stream_nonuniform_props_fallback(spark):
     assert bytes(out[0]["tile_pbf"]) == want
 
 
+def _encode_batch(monkeypatch, geom_type, rows, coords_type):
+    """No Spark: rows (z, x, y, feature_id, coords, props dict or None),
+    sorted by tile (one z and y), as one batch of complete tile groups
+    through the encode UDF's batch body. Returns (output columns,
+    encode_geom_tiles_bulk call count)."""
+    import pyarrow as pa
+
+    from vector_tile_go_spark.codec import encode_fast
+    from vector_tile_go_spark.sparkops import udfs
+    calls = []
+    kernel = encode_fast.encode_geom_tiles_bulk
+
+    def counting(*a, **k):
+        calls.append(1)
+        return kernel(*a, **k)
+
+    monkeypatch.setattr(encode_fast, "encode_geom_tiles_bulk", counting)
+    rb = pa.RecordBatch.from_arrays([
+        pa.array([r[0] for r in rows], pa.int32()),
+        pa.array([r[1] for r in rows], pa.int64()),
+        pa.array([r[2] for r in rows], pa.int64()),
+        pa.array([r[3] for r in rows], pa.int64()),
+        pa.array([r[4] for r in rows], coords_type),
+        pa.array([r[5] and list(r[5].items()) for r in rows],
+                 pa.map_(pa.string(), pa.string()))],
+        names=["z", "x", "y", "feature_id", "coords", "props"])
+    xs = np.array([r[1] for r in rows])
+    starts = np.flatnonzero(np.diff(xs, prepend=-1))
+    ends = np.append(starts[1:], len(rows))
+    out = udfs._geom_tiles(rb, starts, ends, geom_type, "map", "g", 4096,
+                           False).to_pydict()
+    return out, len(calls)
+
+
+def _assert_tiles_match_scalar(out, geom_type, rows, to_geojson):
+    from vector_tile_go_spark.codec.encode import encode_layer
+    for z, x, y, buf in zip(out["z"], out["x"], out["y"], out["tile_pbf"]):
+        feats = [{"type": geom_type, "coordinates": to_geojson(r[4]),
+                  "properties": r[5], "id": r[3] or None}
+                 for r in rows if r[:3] == (z, x, y)]
+        assert buf == encode_layer(feats, z, x, y, "g",
+                                   extent_clamp=False), (geom_type, x)
+
+
 def test_nonuniform_tile_falls_back_alone(monkeypatch):
-    """No Spark: one batch of five tiles, one of them holding rows with
-    different prop-key sets. Only that tile goes through the scalar
-    encode_layer (exactly one call); the other four, three key sets among
-    them (one a null map), ride the bulk kernel. Every tile equals
-    encode_layer; a feature id 0 is absent on both paths."""
+    """No Spark: one batch of five tiles whose rows carry different
+    prop-key sets goes through ONE encode_geom_tiles_bulk call, and
+    every tile equals encode_layer: a tile with two key sets, keys
+    indexed by first appearance across features ({b} then {a, b}), a
+    null map beside keyed rows, and feature id 0 absent. A LineString
+    batch with an aborted (degenerate) feature in a non-uniform tile and
+    a 4-level MultiPolygon batch take one call each too."""
     import pyarrow as pa
 
     import vector_tile_go_spark.tilemath as tm
-    from vector_tile_go_spark.codec.encode import encode_layer
-    from vector_tile_go_spark.sparkops import udfs
+    from vector_tile_go_spark.codec.decode import parse_tile
     z, y = 6, 20
     props = {10: [{"k": "a"}, {"k": "b"}],
-             11: [{"k": "a"}, {"other": "1"}],        # non-uniform
+             11: [{"k": "a"}, {"other": "1"}],        # two key sets
              12: [{"k": "c", "m": "x"}, {"m": "y", "k": "c"}],
-             13: [{"k": "a"}],
-             14: [None]}                              # null map: no tags
-    rows = []
+             13: [{"b": "1"}, {"a": "2", "b": "3"}],  # keys: b, then a
+             14: [None, {"k": "a"}]}                  # null map: no tags
+    polys, lines, mpolys = [], [], []
     for x, ps in props.items():
         w, s, e, n = map(float, tm.tile_bounds(z, x, y))
+
+        def pt(fx, fy):
+            return [w + fx * (e - w), s + fy * (n - s)]
+
         for i, p in enumerate(ps):
-            tri = [[w + (.1 + .1 * i) * (e - w), s + .1 * (n - s)],
-                   [w + .6 * (e - w), s + .2 * (n - s)],
-                   [w + .3 * (e - w), s + .8 * (n - s)]]
-            rows.append((x, i + (x not in (10, 11)), [tri], p))  # ids 0 too
-    rb = pa.RecordBatch.from_arrays([
-        pa.array([z] * len(rows), pa.int32()),
-        pa.array([r[0] for r in rows], pa.int64()),
-        pa.array([y] * len(rows), pa.int64()),
-        pa.array([r[1] for r in rows], pa.int64()),
-        pa.array([r[2] for r in rows],
-                 pa.list_(pa.list_(pa.list_(pa.float64())))),
-        pa.array([r[3] and list(r[3].items()) for r in rows],
-                 pa.map_(pa.string(), pa.string()))],
-        names=["z", "x", "y", "feature_id", "coords", "props"])
-    calls = []
-
-    def counting(*a, **k):
-        calls.append(a[1:4])
-        return encode_layer(*a, **k)
-
-    monkeypatch.setattr(udfs, "encode_layer", counting)
-    out = pa.Table.from_batches(list(udfs._sorted_tile_groups(
-        iter([rb]), lambda b, s, e: udfs._geom_tiles(
-            b, s, e, "Polygon", "map", "g", 4096, False)))).to_pydict()
-    assert calls == [(z, 11, y)]
-    assert out["n_features"] == [2, 2, 2, 1, 1]
-    for x, buf in zip(out["x"], out["tile_pbf"]):
-        feats = [{"type": "Polygon", "coordinates": r[2], "properties": r[3],
-                  "id": r[1] or None} for r in rows if r[0] == x]
-        assert buf == encode_layer(feats, z, x, y, "g", extent_clamp=False)
+            tri = [pt(.1 + .1 * i, .1), pt(.6, .2), pt(.3, .8)]
+            hole = [pt(.25, .3), pt(.35, .3), pt(.3, .4)]
+            fid = i + (x not in (10, 11))              # ids 0 too
+            polys.append((z, x, y, fid, [tri], p))
+            line = [pt(.1 * i, .2), pt(.5, .1 * (i + 2))]
+            if x == 11 and not i:                      # degenerate: aborted
+                line = [pt(.1, .1), pt(.1 + 1e-12, .1)]
+            lines.append((z, x, y, fid, [line], p))
+            mpolys.append((z, x, y, fid, [[tri, hole], [tri]], p))
+    l3 = pa.list_(pa.list_(pa.list_(pa.float64())))
+    out, calls = _encode_batch(monkeypatch, "Polygon", polys, l3)
+    assert calls == 1
+    assert out["n_features"] == [2, 2, 2, 2, 2]
+    _assert_tiles_match_scalar(out, "Polygon", polys, lambda c: c)
+    (layer,) = parse_tile(out["tile_pbf"][3])
+    assert layer.keys == ["b", "a"]
+    out, calls = _encode_batch(monkeypatch, "LineString", lines, l3)
+    assert calls == 1
+    _assert_tiles_match_scalar(out, "LineString", lines, lambda c: c[0])
+    (layer,) = parse_tile(out["tile_pbf"][1])
+    assert len(layer.feature_spans) == 1
+    assert layer.keys == ["k", "other"]  # the aborted feature's key stays
+    out, calls = _encode_batch(monkeypatch, "MultiPolygon", mpolys,
+                               pa.list_(l3))
+    assert calls == 1
+    _assert_tiles_match_scalar(out, "MultiPolygon", mpolys, lambda c: c)
 
 
 def test_persisted_encode_is_coalesced(spark):

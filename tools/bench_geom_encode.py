@@ -1,16 +1,17 @@
-"""Reproduce the round-5 bulk line/polygon encoder microbench
-(BASELINE.md "Round 5: bulk non-point encoder").
+"""Bulk vs scalar encode microbench (BASELINE.md "Round 5: bulk
+non-point encoder").
 
 Usage:  python tools/bench_geom_encode.py [ntiles] [feats_per_tile] [verts]
 
-Compares the scalar per-tile encode_layer loop (what encode_geojson_tiles
-ran before round 5) against flatten_geom_rows + encode_geom_tiles_bulk on
-the same synthetic two-ring (exterior + hole) polygon workload, asserts
-byte-identity, and prints per-feature/per-vertex costs. A second case
-encodes LineStrings with JSON-typed props (str/int/float/bool/null)
-through encode_geojson_tiles' batch body (Arrow column in, json.loads per
-row, typed bulk dictionary) against encode_layer over json.loads of the
-same rows, again asserting byte-identity. A third case encodes Points
+Compares a per-tile loop over the scalar oracle encoder, encode_layer,
+against flatten_geom_rows + encode_geom_tiles_bulk on the same synthetic
+two-ring (exterior + hole) polygon workload, asserts byte-identity, and
+prints per-feature/per-vertex costs. A second case encodes LineStrings
+with JSON-typed props (str/int/float/bool/null, one key absent from some
+rows) through encode_geojson_tiles' batch body (udfs._geom_tiles: Arrow
+column in, json.loads per row, one kernel call over flat property
+entries) against encode_layer over json.loads of the same rows, again
+asserting byte-identity. A third case encodes Points
 with string props (the encode_point_tiles kernel input) through an
 encode_layer loop and through encode_point_tiles_bulk, asserting
 byte-identity and printing us/feature. Standalone kernel
@@ -51,6 +52,8 @@ def json_lines_case(ntiles, fpt, vpr, rng):
             props = {"name": f"r{i % 11}", "lanes": int(i % 4),
                      "speed": [30.0, 50.0, 0.0, -0.0][i % 4],
                      "oneway": bool(i % 2), "ref": None if i % 5 else "A1"}
+            if i % 3 == 0:  # rows need not share a key set
+                del props["lanes"]
             rows.append((tx, ty, i + 1, pts, json.dumps(props)))
     rows.sort(key=lambda r: (r[0], r[1], r[2]))
     t0 = time.perf_counter()

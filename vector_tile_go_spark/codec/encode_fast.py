@@ -2,14 +2,18 @@
 geometry type, through one kernel (encode_geom_tiles_bulk; Point layers
 reach it through encode_point_tiles_bulk).
 
-Byte-identical to running encode.encode_layer per tile with canonical
-(sorted) property keys and id 0 passed as absent — pinned by
+Byte-identical to running encode.encode_layer per tile with id 0 passed
+as absent, whatever property keys each feature carries — pinned by
 tests/test_encode_fast.py — but organized for throughput:
 
 - projection is vectorized across the whole batch (per-vertex tile bounds
   from the x/y arrays, one numpy pass; replicates Cursor.tile_ints
   including trunc-toward-zero and ExtentBool clamping,
   write_geometry.go:292-323)
+- properties are flat per-feature entries; each tile's key and value
+  dictionaries are first-appearance ranks over them, the interning order
+  of LayerEncoder._tags (write_layer.go:95-112), so features need not
+  share a key set
 - per-tile work is only frame assembly over plain Python bytes (no pandas
   in the loop)
 
@@ -113,6 +117,15 @@ def _write_varints(buf: np.ndarray, pos: np.ndarray, vals: np.ndarray,
         buf[pos[m] + b] = bv
 
 
+def _segment_pos(start, seg, cum) -> np.ndarray:
+    """Byte position of every varint of a stream in which feature i owns
+    values ``[seg[i], seg[i + 1])``, written back to back from byte
+    ``start[i]``; ``cum`` is the stream's byte-length prefix sum (leading
+    0)."""
+    f = np.repeat(np.arange(len(start)), np.diff(seg))
+    return start[f] - cum[seg[:-1]][f] + cum[:-1]
+
+
 def _value_codes(flat: np.ndarray):
     """Codes into a typed value table for the object array ``flat``: two
     values share a code iff LayerEncoder._value_idx gives them one
@@ -140,23 +153,44 @@ def _value_codes(flat: np.ndarray):
     return codes, uniques, signed_zero
 
 
-def _props_dict_bulk(cols, tile_of_row, ntiles: int, nrows: int):
-    """Per-tile shared value dictionary, indexed in first-appearance order
-    (feature-major, column-minor): one global typed factorize
-    (_value_codes) + a per-tile first-seen rank over the (tile, value)
-    uniques. ``cols`` are object arrays of property values (any of the
-    MVT Value types, values.write_value) in sorted-key order. Returns
-    (vi, vilen, pl_u, props_len, counts, enc_uniques, codes_in_order, kp)
-    for encode_geom_tiles_bulk's property scatter and frame assembly."""
-    ncols = len(cols)
-    mat = np.empty((nrows, ncols), dtype=object)
-    for j, c in enumerate(cols):
-        mat[:, j] = c
-    codes, uniques, signed_zero = _value_codes(mat.ravel())  # row-major
-    U = max(len(uniques), 1)
-    combined = np.repeat(tile_of_row, ncols) * U + codes
+def _prop_entries(props, nfeat: int):
+    """Properties as flat per-feature entries, sorted by key name inside
+    each feature (the order LayerEncoder._tags walks them): (key codes,
+    key names, values, offsets). A code indexes the names, which are
+    sorted, so code order is name order. ``props`` is either a dict of
+    equal-length value columns (every feature has every key; its codes
+    are known, no string factorize) or ``(keys, values, offsets)``:
+    feature i's entries are ``[offsets[i], offsets[i + 1])`` of the
+    ``keys``/``values`` arrays, keys unique within a feature."""
+    import pandas as pd
+
+    if isinstance(props, dict):
+        names = sorted(props)
+        mat = np.empty((nfeat, len(names)), dtype=object)
+        for j, k in enumerate(names):
+            mat[:, j] = props[k]
+        return (np.tile(np.arange(len(names)), nfeat), names, mat.ravel(),
+                np.arange(nfeat + 1) * len(names))
+    keys, values, offs = props
+    offs = np.asarray(offs, np.int64)
+    if len(offs) != nfeat + 1:
+        raise ValueError(f"{len(offs)} property offsets for {nfeat} features")
+    lo, hi = int(offs[0]), int(offs[-1])
+    codes, names = pd.factorize(np.asarray(keys, dtype=object)[lo:hi],
+                                sort=True)
+    perm = np.lexsort((codes, np.repeat(np.arange(nfeat), np.diff(offs))))
+    return (codes[perm], list(names),
+            np.asarray(values, dtype=object)[lo:hi][perm], offs - lo)
+
+
+def _first_seen(tile_of, codes, ncodes: int, ntiles: int):
+    """Per-tile dictionaries over ``codes`` in first-appearance order (the
+    interning of LayerEncoder._key_idx/_value_idx): each element's index
+    in its tile's dictionary, the dictionary size per tile, and every
+    dictionary entry's code and first element, tile by tile."""
+    U = max(ncodes, 1)
     uniq_c, first_idx, inverse = np.unique(
-        combined, return_index=True, return_inverse=True)
+        tile_of * U + codes, return_index=True, return_inverse=True)
     tile_of_uniq = uniq_c // U
     order = np.lexsort((first_idx, tile_of_uniq))
     counts = np.bincount(tile_of_uniq, minlength=ntiles)
@@ -164,27 +198,62 @@ def _props_dict_bulk(cols, tile_of_row, ntiles: int, nrows: int):
     ranks = np.empty(len(uniq_c), dtype=np.int64)
     ranks[order] = (np.arange(len(uniq_c)) -
                     np.repeat(tile_u_starts, counts))
-    vi = ranks[inverse].reshape(nrows, ncols).astype(np.uint64)
-    vilen = _varlen_u64(vi.ravel()).reshape(nrows, ncols)
+    return (ranks[inverse.reshape(-1)], counts, uniq_c[order] % U,
+            first_idx[order])
+
+
+def _tile_dicts(counts, enc: list, codes):
+    """All tiles' dictionary bytes as one blob and its per-tile cut
+    offsets: the pre-encoded ``enc[code]`` of every entry (``codes``,
+    tile by tile, ``counts`` per tile) gathered in one numpy pass."""
+    lens = np.fromiter(map(len, enc), np.int64, len(enc))
+    flat = np.frombuffer(b"".join(enc), np.uint8)
+    at = np.concatenate([[0], np.cumsum(lens)])
+    n = lens[codes]
+    cum = np.concatenate([[0], np.cumsum(n)])
+    src = np.repeat(at[codes] - cum[:-1], n) + np.arange(int(cum[-1]))
+    return flat[src].tobytes(), cum[np.cumsum(np.append(0, counts))].tolist()
+
+
+def _tags_bulk(props, tile_of_feat, ntiles: int):
+    """The packed tags of every feature and the key and value
+    dictionaries of every tile (GetTags, write_layer.go:95-112): one
+    per-tile first-seen rank over the (tile, key) pairs and one over the
+    (tile, typed value) pairs (_value_codes), both walked entry by entry
+    (_prop_entries order). Returns (tags, tag varint lengths, entry
+    offsets per feature, tag payload length per feature, and the keys and
+    the values as _tile_dicts blobs); ``tags`` interleaves each entry's
+    key and value index."""
+    nfeat = len(tile_of_feat)
+    kcodes, knames, values, offs = _prop_entries(props, nfeat)
+    nent = np.diff(offs)
+    tile_of_ent = np.repeat(tile_of_feat, nent)
+    ki, kcounts, kcodes_in_order, _ = _first_seen(
+        tile_of_ent, kcodes, len(knames), ntiles)
+    vcodes, uniques, signed_zero = _value_codes(values)
+    vi, vcounts, vcodes_in_order, vfirst = _first_seen(
+        tile_of_ent, vcodes, len(uniques), ntiles)
     # encode each GLOBAL unique value once; per-tile streams gather the
-    # pre-encoded bytes (O(global uniques) encodes, not O(tile-distinct) —
-    # the profiled residue of the r3 loop); str, the hot case, skips
-    # write_value's type dispatch
-    enc_uniques = [_value_str(v) if type(v) is str else write_value(v)
-                   for v in uniques]
-    codes_in_order = uniq_c[order] % U
-    amb = np.flatnonzero(signed_zero[codes_in_order])
+    # pre-encoded bytes; str, the hot case, skips write_value's dispatch
+    enc_values = [_value_str(v) if type(v) is str else write_value(v)
+                  for v in uniques]
+    amb = np.flatnonzero(signed_zero[vcodes_in_order])
     if len(amb):
         # a signed-zero entry takes its bytes from its first row in the tile
-        flat = mat.ravel()
-        codes_in_order[amb] = len(enc_uniques) + np.arange(len(amb))
-        enc_uniques += [write_value(flat[i]) for i in first_idx[order][amb]]
-    codes_in_order = codes_in_order.tolist()
-    kp = [_varint(j) for j in range(ncols)]
-    payload_len = vilen.sum(axis=1) + sum(len(b) for b in kp)
-    pl_u = payload_len.astype(np.uint64)
-    props_len = 1 + _varlen_u64(pl_u) + payload_len
-    return vi, vilen, pl_u, props_len, counts, enc_uniques, codes_in_order, kp
+        vcodes_in_order[amb] = len(enc_values) + np.arange(len(amb))
+        enc_values += [write_value(values[i]) for i in vfirst[amb]]
+    enc_keys = [b"\x1a" + _varint(len(raw)) + raw
+                for raw in (k.encode("utf-8") for k in knames)]
+    tags = np.empty(2 * len(ki), np.uint64)
+    tags[0::2] = ki
+    tags[1::2] = vi
+    tlen = _varlen_u64(tags)
+    payload = np.bincount(np.repeat(np.arange(nfeat), nent),
+                          weights=tlen[0::2] + tlen[1::2],
+                          minlength=nfeat).astype(np.int64)
+    return (tags, tlen, offs, payload,
+            _tile_dicts(kcounts, enc_keys, kcodes_in_order),
+            _tile_dicts(vcounts, enc_values, vcodes_in_order))
 
 
 def encode_point_tiles_bulk(z: int, x_arr, y_arr, lng, lat, ids,
@@ -221,17 +290,18 @@ def encode_point_tiles_bulk(z: int, x_arr, y_arr, lng, lat, ids,
         extent=extent, clamp=True)[0]
 
 
-def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
+def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, props,
                            starts, ends, layer_name: str, geom_type: str,
                            verts, ring_lens, ring_feat, ring_first_of_poly,
                            extent: int = 4096,
                            clamp: bool = False):
     """The one bulk layer encoder, for every geometry type (Point layers
     reach it through encode_point_tiles_bulk). Byte-identical to
-    encode.encode_layer with canonical sorted keys and id 0 passed as
-    absent — same cursor/delta/winding semantics as the scalar builders
-    (write_geometry.go:108-331), pinned by tests/test_encode_fast.py — but
-    with NO per-feature or per-vertex Python:
+    encode.encode_layer with id 0 passed as absent, for any per-feature
+    property key sets — same cursor/delta/winding semantics as the scalar
+    builders (write_geometry.go:108-331) and the same dictionaries as
+    LayerEncoder._tags, pinned by tests/test_encode_fast.py — but with NO
+    per-feature or per-vertex Python:
 
     - ring closure (TrimPolygonFloat, :26-35) as one gather expansion
     - projection of every vertex in one pass (per-feature tile params)
@@ -243,12 +313,17 @@ def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
     - command values scattered into one stream, then one masked varint
       scatter per field into a single feature buffer; per-tile Python is
       only frame assembly (O(tiles), not O(features))
-    - property dictionaries via the shared _props_dict_bulk (aborted
-      features still intern their values, like the scalar add_feature)
+    - per-tile key and value dictionaries as first-seen ranks over the
+      flat property entries, and every feature's tags as one entry-level
+      varint scatter (_tags_bulk; aborted features still intern their
+      keys and values, like the scalar add_feature)
 
-    Inputs: per-FEATURE arrays (x_arr/y_arr/ids/prop_cols, whose values
-    may be any MVT Value type; ``starts``/``ends`` = contiguous feature
-    slices per tile) and flattened geometry:
+    Inputs: per-FEATURE arrays (x_arr/y_arr/ids; ``starts``/``ends`` =
+    contiguous feature slices per tile, covering every feature), the
+    properties as flat per-feature entries ``(keys, values, offsets)`` or
+    a dict of equal-length value columns (_prop_entries; values may be
+    any MVT Value type, and a feature with no entries gets no tags field)
+    and flattened geometry:
     ``verts`` (N, 2) float64, ``ring_lens`` (R,), ``ring_feat`` (R,)
     nondecreasing, ``ring_first_of_poly`` (R,) bool (exterior-ring flag;
     ignored for lines). The id field is written only for a nonzero id
@@ -403,23 +478,21 @@ def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
     feat_v_offs = np.concatenate([[0], np.cumsum(feat_nvals)])
     glen = vlen_cum[feat_v_offs[1:]] - vlen_cum[feat_v_offs[:-1]]
 
-    # --- feature framing (id only when nonzero; aborted features get
-    # zero-length frames but still contribute to the dictionaries, like
-    # the scalar add_feature)
-    keynames = sorted(prop_cols)
-    cols = [np.asarray(prop_cols[k], dtype=object) for k in keynames]
-    ncols = len(keynames)
+    # --- feature framing (id only when nonzero, tags only when the
+    # feature has entries; aborted features get zero-length frames but
+    # still contribute to the dictionaries, like the scalar add_feature)
     tile_of_feat = np.repeat(np.arange(ntiles), ends - starts)
+    tags, tlen, offs, payload, (kblob, kcut), (vblob, vcut) = _tags_bulk(
+        props, tile_of_feat, ntiles)
+    nent = np.diff(offs)
+    has_tags = nent > 0
+    pl_u = payload.astype(np.uint64)
+    plnb = _varlen_u64(pl_u)
+    props_len = np.where(has_tags, 1 + plnb + payload, 0)
     uid = ids.astype(np.uint64)
     idnb = _varlen_u64(uid)
     has_id = ids != 0
     id_len = np.where(has_id, 1 + idnb, 0)
-    if ncols:
-        (vi, vilen, pl_u, props_len, counts, enc_uniques,
-         codes_in_order, kp) = _props_dict_bulk(cols, tile_of_feat,
-                                                ntiles, nfeat)
-    else:
-        props_len = np.zeros(nfeat, dtype=np.int64)
     gnb = _varlen_u64(glen.astype(np.uint64))
     parts_len = id_len + props_len + 2 + (1 + gnb + glen)
     pnb = _varlen_u64(parts_len.astype(np.uint64))
@@ -435,48 +508,36 @@ def encode_geom_tiles_bulk(z, x_arr, y_arr, ids, prop_cols,
     buf[p[wid]] = 0x08
     _write_varints(buf, p[wid] + 1, uid[live][wid], idnb[live][wid])
     p = p + id_len[live]
-    if ncols:
-        buf[p] = 0x12
-        plnb = _varlen_u64(pl_u)
-        _write_varints(buf, p + 1, pl_u[live], plnb[live])
-        q = p + 1 + plnb[live]
-        for j in range(ncols):
-            for bi, byte in enumerate(kp[j]):
-                buf[q + bi] = byte
-            q = q + len(kp[j])
-            _write_varints(buf, q, vi[live, j], vilen[live, j])
-            q = q + vilen[live, j]
-        p = p + props_len[live]
+    wtag = has_tags[live]
+    buf[p[wtag]] = 0x12
+    _write_varints(buf, p[wtag] + 1, pl_u[live][wtag], plnb[live][wtag])
+    tposf = np.zeros(nfeat, np.int64)
+    tposf[live] = p + 1 + plnb[live]
+    tkeep = np.repeat(live, 2 * nent)
+    tpos = _segment_pos(tposf, 2 * offs,
+                        np.concatenate([[0], np.cumsum(tlen)]))
+    _write_varints(buf, tpos[tkeep], tags[tkeep], tlen[tkeep])
+    p = p + props_len[live]
     buf[p] = 0x18
     buf[p + 1] = geom_int
     buf[p + 2] = 0x22
     _write_varints(buf, p + 3, glen[live].astype(np.uint64), gnb[live])
     gposf = np.zeros(nfeat, np.int64)
     gposf[live] = p + 3 + gnb[live]
-    if len(vals):
-        f_of_val = np.repeat(np.arange(nfeat), feat_nvals)
-        vpos = (gposf[f_of_val] - vlen_cum[feat_v_offs[:-1]][f_of_val]
-                + vlen_cum[:-1])
-        _write_varints(buf, vpos, vals, vlen)
+    # aborted features have no command values (every ring truncated)
+    _write_varints(buf, _segment_pos(gposf, feat_v_offs, vlen_cum), vals,
+                   vlen)
 
     # --- per-tile frame assembly (O(tiles) Python)
     name_raw = layer_name.encode("utf-8")
     name_bytes = b"\x0a" + _varint(len(name_raw)) + name_raw
-    keys_bytes = b"".join(
-        b"\x1a" + _varint(len(k.encode("utf-8"))) + k.encode("utf-8")
-        for k in keynames)
     tail = b"\x28" + _varint(extent) + b"\x78\x02"
     feats_all = buf.tobytes()
-    tile_lo, tile_hi = byte_cut[starts].tolist(), byte_cut[ends].tolist()
-    if ncols:
-        ucut = np.concatenate([[0], np.cumsum(counts)]).tolist()
-        vbs = [b"".join(map(enc_uniques.__getitem__, codes_in_order[a:b]))
-               for a, b in zip(ucut[:-1], ucut[1:])]
-    else:
-        vbs = [b""] * ntiles
     out = []
-    for lo, hi, vb in zip(tile_lo, tile_hi, vbs):
-        body = name_bytes + feats_all[lo:hi] + keys_bytes + vb + tail
+    for t, (lo, hi) in enumerate(zip(byte_cut[starts].tolist(),
+                                     byte_cut[ends].tolist())):
+        body = (name_bytes + feats_all[lo:hi] + kblob[kcut[t]:kcut[t + 1]]
+                + vblob[vcut[t]:vcut[t + 1]] + tail)
         out.append(b"\x1a" + _varint(len(body)) + body)
     return out, np.bincount(tile_of_feat[live], minlength=ntiles)
 

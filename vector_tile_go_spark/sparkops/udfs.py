@@ -5,12 +5,14 @@ everything before (extraction, tile assignment) and after (aggregation,
 joins) stays JVM-side. Every UDF is Arrow-batched; no per-row Python
 anywhere. The encoders all take the same plan (``_encode_plan``): one
 repartition on the tile key, a sortWithinPartitions, then ``mapInArrow``
-over one sorted-batch carry protocol (``_sorted_tile_groups``) feeding a
-vectorized kernel, so no pandas frame is built on either side of the
-encode boundary. The decoders are ``mapInArrow`` too: each decodes its
-tiles' layers through the one layer decode
-(``codec.decode.decode_layer_columns``) or its own kernel, and builds its
-output RecordBatch from the columns.
+over one sorted-batch carry protocol (``_sorted_tile_groups``) feeding
+the one bulk encode kernel (``codec.encode_fast.encode_geom_tiles_bulk``)
+once per batch, so no pandas frame is built on either side of the encode
+boundary and no tile falls back to the scalar ``codec.encode`` oracle:
+rows of any property key sets encode byte-identically to it. The
+decoders are ``mapInArrow`` too: each decodes its tiles' layers through
+the one layer decode (``codec.decode.decode_layer_columns``) or its own
+kernel, and builds its output RecordBatch from the columns.
 
 Scale notes (the 100 TB story):
 - encode shuffles once on (z, x, y) — the same explicit boundary the
@@ -33,8 +35,6 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..codec.encode import encode_layer
 
 TILE_SCHEMA = "z int, x bigint, y bigint, layer string, tile_pbf binary, n_features int"
 
@@ -628,61 +628,13 @@ def _props_entries(col, kind: str):
     return keys, _object_array(col.items.slice(lo, n).to_pylist()), o - lo
 
 
-def _key_sets(keys, offs):
-    """Per-row key-set ids over flat per-row entries: rows whose keys are
-    the same set (in any order) share an id. Returns (ids, sorted key
-    names per id, perm), where ``perm`` orders every row's entries by key
-    name (rows stay in place). Keys are unique within a row: Spark
-    deduplicates map keys and json.loads builds a dict."""
-    n = len(offs) - 1
-    lens = np.diff(offs)
-    width = int(lens.max()) if n else 0
-    row = np.repeat(np.arange(n), lens)
-    if not width:
-        return np.zeros(n, np.int64), [()], np.arange(len(keys))
-    codes, names = pd.factorize(keys, sort=True)
-    perm = np.lexsort((codes, row))
-    sc = codes[perm]
-    mat = np.full((n, width), -1, np.int64)
-    mat[row, np.arange(len(sc)) - offs[row]] = sc
-    sets, ids = np.unique(mat, axis=0, return_inverse=True)
-    return (ids.reshape(-1).astype(np.int64),
-            [tuple(names[c] for c in s if c >= 0) for s in sets], perm)
-
-
-def _take_features(geom, rows, nfeat: int):
-    """The flat geometry arrays of features ``rows`` (ascending) only,
-    renumbered 0..len(rows)-1."""
-    verts, ring_lens, ring_feat, first = geom
-    rank = np.full(nfeat, -1, np.int64)
-    rank[rows] = np.arange(len(rows))
-    keep = rank[ring_feat] >= 0
-    return (verts[np.repeat(keep, ring_lens)], ring_lens[keep],
-            rank[ring_feat[keep]], first[keep])
-
-
-def _geojson_coords(geom_type: str, c, four_level: bool):
-    """One row's coords list -> the GeoJSON coordinates encode_layer takes
-    (the layouts flatten_geom_arrow reads)."""
-    if four_level:
-        return c
-    if geom_type in ("LineString", "MultiPoint"):
-        return c[0]
-    if geom_type == "Point":
-        return c[0][0]
-    if geom_type == "MultiPolygon":
-        return [[ring] for ring in c]
-    return c
-
-
 def _geom_tiles(rb, starts, ends, geom_type: str, props_kind: str,
                 layer_name: str, extent: int, extent_clamp: bool):
-    """Complete tile groups of one sorted batch -> their layers. Geometry
-    comes from the coords column's list offsets (flatten_geom_arrow),
-    property values keep their types. Tiles whose rows all share one key
-    set go through encode_geom_tiles_bulk, one call per distinct key set;
-    a tile whose rows differ in their key sets is encoded by the scalar
-    encode_layer, and only that tile."""
+    """Complete tile groups of one sorted batch -> their layers, in one
+    encode_geom_tiles_bulk call. Geometry comes from the coords column's
+    list offsets (flatten_geom_arrow); properties are the rows' flat
+    entries (_props_entries), values keeping their types, so rows need
+    not share a key set."""
     from ..codec.encode_fast import encode_geom_tiles_bulk, flatten_geom_arrow
 
     def col(c):
@@ -690,45 +642,12 @@ def _geom_tiles(rb, starts, ends, geom_type: str, props_kind: str,
 
     if rb.column("feature_id").null_count:
         raise ValueError("null feature_id")  # no int64 id to write
-    zs, xs, ys = col("z"), col("x"), col("y")
-    fids = col("feature_id").astype(np.int64)
-    coords = rb.column("coords")
-    geom = flatten_geom_arrow(geom_type, coords)
-    keys, vals, offs = _props_entries(rb.column("props"), props_kind)
-    ks, key_sets, perm = _key_sets(keys, offs)
-    sorted_vals = vals[perm]
-    lo = np.minimum.reduceat(ks, starts)
-    tile_ks = np.where(lo == np.maximum.reduceat(ks, starts), lo, -1)
-    bufs: list = [None] * len(starts)
-    four_level = pa.types.is_list(coords.type.value_type.value_type.value_type)
-    for t in np.flatnonzero(tile_ks < 0):
-        s, e = int(starts[t]), int(ends[t])
-        feats = [{"type": geom_type,
-                  "coordinates": _geojson_coords(geom_type, c, four_level),
-                  "properties": dict(zip(keys[offs[i]:offs[i + 1]],
-                                         vals[offs[i]:offs[i + 1]])),
-                  "id": int(fids[i]) or None}  # id 0 = absent
-                 for i, c in zip(range(s, e),
-                                 coords.slice(s, e - s).to_pylist())]
-        bufs[t] = encode_layer(feats, int(zs[s]), int(xs[s]), int(ys[s]),
-                               layer_name, extent=extent,
-                               extent_clamp=extent_clamp)
-    for k in np.unique(tile_ks[tile_ks >= 0]):
-        tiles = np.flatnonzero(tile_ks == k)
-        lens = ends[tiles] - starts[tiles]
-        t_ends = np.cumsum(lens)
-        rows = (np.repeat(starts[tiles] - (t_ends - lens), lens)
-                + np.arange(int(t_ends[-1])))
-        g = geom if len(tiles) == len(starts) else \
-            _take_features(geom, rows, len(fids))
-        props = {name: sorted_vals[offs[rows] + j]
-                 for j, name in enumerate(key_sets[k])}
-        out, _ = encode_geom_tiles_bulk(
-            zs[rows], xs[rows], ys[rows], fids[rows], props,
-            t_ends - lens, t_ends, layer_name, geom_type, *g,
-            extent=extent, clamp=extent_clamp)
-        for t, buf in zip(tiles, out):
-            bufs[t] = buf
+    bufs, _ = encode_geom_tiles_bulk(
+        col("z"), col("x"), col("y"), col("feature_id").astype(np.int64),
+        _props_entries(rb.column("props"), props_kind), starts, ends,
+        layer_name, geom_type,
+        *flatten_geom_arrow(geom_type, rb.column("coords")),
+        extent=extent, clamp=extent_clamp)
     return _tile_batch(rb, starts, ends, layer_name, bufs)
 
 
@@ -756,9 +675,9 @@ def encode_geojson_tiles(features: DataFrame, geom_type: str,
     sortWithinPartitions + a streaming mapInArrow whose kernel
     (encode_geom_tiles_bulk) vectorizes projection/winding/delta/varint
     across every tile in the Arrow batch. Byte-identical to the scalar
-    encode_layer per tile (pinned by tests/test_encode_fast.py); a tile
-    whose rows differ in their property key sets is encoded by
-    encode_layer inside the UDF. This gives polygon-heavy workloads
+    encode_layer per tile whatever property keys each row carries (pinned
+    by tests/test_encode_fast.py and tests/test_geom_tiles.py), with no
+    scalar fallback. This gives polygon-heavy workloads
     (building footprints, parcels — billions of rows) the cost model of
     the point firehose (reference equivalent: write_geometry.go:108-378,
     one cost model for every type)."""
